@@ -204,7 +204,8 @@ object Graft {
   /** Cross-engine diff: the b-side lives in an external engine reachable
     * only through `engine`; per-segment checksum SQL is pushed there and
     * only bucket summaries plus leaf rows cross the wire (the reference's
-    * core use case; control loop in graft.sources.PushdownDiffer). The
+    * core use case; `PushdownDiffer` runs the one bisection engine,
+    * graft.sources.Bisection, with a Spark side and a remote side). The
     * remote normalizes under the LOCAL side's Spark schema — the mutual
     * schema, as negotiated by the reference's _validate_and_adjust_columns. */
   def diffPushdown(local: TableSegment, engine: graft.sources.RemoteEngine,
@@ -224,8 +225,8 @@ object Graft {
     * from its own catalog (`RemoteSchema.introspect` — types, precisions,
     * 64-row text refinement) and the two sides' timestamp/fraction
     * precisions are negotiated with `alignPrecision` before any checksum
-    * ships. Prefer this over `diffPushdown` unless the remote schema is
-    * already known out-of-band. */
+    * ships, then runs the same engine as `diffPushdown`. Prefer this over
+    * `diffPushdown` unless the remote schema is already known out-of-band. */
   def diffPushdownIntrospected(local: TableSegment, engine: graft.sources.RemoteEngine,
       remoteTable: String, remoteWhereSql: Option[String] = None,
       bisectionFactor: Int = graft.sources.PushdownDiffer.DefaultBisectionFactor,
@@ -243,7 +244,8 @@ object Graft {
     * reference's primary scenario (postgres ↔ mysql): both schemas come
     * from their own catalogs, precisions are negotiated across the two
     * sides, and Spark only coordinates bisection and compares downloaded
-    * leaf rows (see RemoteRemoteDiffer). */
+    * leaf rows (`RemoteRemoteDiffer`: the bisection engine,
+    * graft.sources.Bisection, with two remote sides). */
   def diffRemotes(spark: SparkSession,
       engineA: graft.sources.RemoteEngine, tableA: String,
       engineB: graft.sources.RemoteEngine, tableB: String,
@@ -263,7 +265,7 @@ object Graft {
   }
 
   /** Negotiate mutual precision between a local segment and an introspected
-    * remote table. PushdownDiffer REQUIRES both sides to normalize at the
+    * remote table. The bisection engine REQUIRES both sides to normalize at the
     * same knobs; this helper makes the contract impossible to silently
     * violate (reference: hashdiff_tables.py:119-168 negotiates per column
     * pair). Timestamps take the MINIMUM (normalizing finer than an engine

@@ -437,17 +437,10 @@ object Cli {
       // early-streaming UX). Off under --limit (which wants at most N rows
       // printed once).
       var printedProgressively = false
-      // flipSigns: the (remote, local) branch runs the pushdown with the
-      // sides swapped, so leaf rows arrive with '-'/'+' inverted — flip
-      // them HERE, at print time, so progressive output matches the
-      // flipped final DataFrame ('-' always means side A)
-      def progressiveControl(flipSigns: Boolean = false): graft.sources.PushdownControl =
+      def progressiveControl(): graft.sources.PushdownControl =
         new graft.sources.PushdownControl(progressive = a.limit.isEmpty,
             quantileSeed = a.quantileSeed) {
-          override def onLeafDiff(level: Int, d0: org.apache.spark.sql.DataFrame): Unit = {
-            import org.apache.spark.sql.functions.{col, lit, when}
-            val d = if (!flipSigns) d0 else d0.withColumn("sign",
-              when(col("sign") === "-", lit("+")).otherwise(lit("-")))
+          override def onLeafDiff(level: Int, d: org.apache.spark.sql.DataFrame): Unit = {
             if (a.json) DiffFormat.toJsonl(d).toLocalIterator().forEachRemaining(println(_))
             else d.toLocalIterator().forEachRemaining(r => println(r.mkString(" ")))
             printedProgressively = true
@@ -483,8 +476,8 @@ object Cli {
               progressiveControl())
           } finally eng.close() // leaf rows are materialized locally by now
         case (Some((db, table)), None) =>
-          // remote side FIRST: run the same pushdown with the local side
-          // playing "b", then flip the signs so '-' still means side A
+          // remote side FIRST: the same introspected pushdown, with the
+          // remote as the engine's side a so '-' means side A
           val eng = engineFor(db)
           try {
             val segB = segment(a.sourceB)
@@ -492,11 +485,13 @@ object Cli {
                            else segB.relevantCols.filterNot(a.keys.contains))
               .filterNot(a.ignore.contains)
             remoteTotalA = Some(remoteCount(eng, table))
-            import org.apache.spark.sql.functions.{col, lit, when}
-            Graft.diffPushdownIntrospected(segB.copy(extraCols = compare), eng, table,
-              remoteWhereFor(eng.profile), a.bisectionFactor, a.bisectionThreshold,
-              progressiveControl(flipSigns = true))
-              .withColumn("sign", when(col("sign") === "-", lit("+")).otherwise(lit("-")))
+            val local = segB.copy(extraCols = compare)
+            val remote = graft.sources.RemoteTable.introspect(eng, table, local.keyCols,
+              local.relevantCols.filterNot(local.keyCols.contains), remoteWhereFor(eng.profile))
+            val (l, r) = Graft.alignPrecision(local, remote)
+            graft.sources.Bisection.diff(graft.sources.RemoteSide(spark, r),
+              graft.sources.SparkSide(l), a.bisectionFactor, a.bisectionThreshold,
+              progressiveControl())._1
           } finally eng.close()
         case (None, None) =>
           val segB = segment(a.sourceB)

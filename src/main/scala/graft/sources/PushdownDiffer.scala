@@ -1,13 +1,9 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import graft.diff.{Checksum, JoinDiffer, KeySpace, TableSegment}
+import graft.diff.TableSegment
 
 /** The table on the far side of a pushdown diff: reachable only through
   * `engine.query(sql)`, described by the mutual (Spark-side) logical schema
@@ -69,7 +65,9 @@ final case class PushdownStats(
 /** One finished bisection level, reported to PushdownControl.onLevel. */
 final case class PushdownLevel(level: Int, segments: Int, pruned: Int, millis: Long)
 
-/** Mid-flight control + guardrails for the bisection loop.
+/** Mid-flight control + guardrails for the one cross-engine bisection loop
+  * ([[Bisection]]), whichever pairing runs it — `PushdownDiffer`
+  * (Spark frame ↔ remote) or `RemoteRemoteDiffer` (remote ↔ remote).
   *
   *  - `ignoreColumn` drops a column from the compare between levels — the
   *    reference's `ignore_column` re-plan (diff_tables.py:196-199), used
@@ -95,7 +93,7 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
       * reference's yielded iterator. */
     val progressive: Boolean = false,
     /** Dense-diff cutover: once `denseCutoverAfterLevels` levels have run
-      * with a CUMULATIVE prune rate below `denseCutoverPruneRate`, the
+      * with a CUMULATIVE prune rate below `DenseCutoverPruneRate`, the
       * table differs ~everywhere and further bisection is strictly wasted
       * remote work — every deeper level re-checksums rows that will be
       * leaf-fetched anyway (at a 50% diff rate the remote would run
@@ -108,13 +106,9 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
       * (cloud-DB bypass, joindiff_tables.py:159-163).
       * `Int.MaxValue` disables. */
     val denseCutoverAfterLevels: Int = 2,
-    val denseCutoverPruneRate: Double = 0.10,
-    /** Small-frontier fast path bound, in units of `bisectionThreshold`
-      * rows (see denseCutover). */
-    val denseCutoverFrontierFactor: Int = 4,
-    /** Split boxes at sampled LOCAL row-quantiles instead of arithmetic
+    /** Split boxes at sampled row-quantiles instead of arithmetic
       * mid-widths — the root at level 0 and every level's dirty parents
-      * (all of a level's parents cut in ONE Spark job). Sparse/clustered
+      * (each sampling side cuts all of its parents in one batch). Sparse/clustered
       * key spaces — snowflake IDs with epoch gaps, tenant prefixes —
       * make arithmetic children wildly unbalanced: one child holds
       * ~every row and the loop burns whole levels (each a remote
@@ -123,18 +117,16 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
       * actually are, so the level count is ~log_factor(n/threshold)
       * regardless of key distribution. Correctness is unaffected either
       * way — splits only refine HOW a box is partitioned, never its
-      * coverage; remote-only rows land in whichever segment contains
-      * them (balance is estimated from the local side — the sides agree
-      * modulo the diff itself — and a parent invisible locally falls
+      * coverage; rows the sampling side lacks land in whichever segment
+      * contains them (balance is estimated from one side — the sides agree
+      * modulo the diff itself — and a parent that side cannot see falls
       * back to the arithmetic split). Single-column keys only (compound
       * keys always use the arithmetic mesh). Cost: one sampled
-      * key-column pass per level plus one count() up front. In the
-      * local↔remote loop (PushdownDiffer) the sample is a local Spark
-      * pass; remote↔remote has no Spark-readable side, so under the
-      * same knob RemoteRemoteDiffer seeds from a dialect-level
-      * deterministic sample pushed to the larger engine — sampleSql
-      * ordered by md5-of-key (RemoteRemoteDiffer.quantileSplitAll).
-      * ON by default: measured 6→2 levels / 13→7 remote
+      * key-column pass per level plus one count up front. A Spark side
+      * samples its own rows in a local pass; between two remote sides
+      * each parent samples on its larger side through a dialect-level
+      * deterministic sample — sampleSql ordered by md5-of-key
+      * (RemoteSide.samples). ON by default: measured 6→2 levels / 13→7 remote
       * round-trips on snowflake-ID keys with bit-identical rows
       * (ScaleProbe), and on already-uniform keys the splits land within
       * one level of the arithmetic ones (spec-pinned) — the sampling
@@ -143,13 +135,13 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
       * reference's arithmetic checkpoints (utils.py:321-324). */
     val quantileSeed: Boolean = true) {
 
-  /** The cutover CANDIDACY decision, shared by both differs. Two triggers:
+  /** The cutover CANDIDACY decision. Two triggers:
     *  - the configured rule: `denseCutoverAfterLevels` levels done with a
-    *    cumulative prune rate below `denseCutoverPruneRate` — multi-level
+    *    cumulative prune rate below `DenseCutoverPruneRate` — multi-level
     *    evidence that bisection is not pruning (HashDiffer makes the same
     *    call when every bucket is dirty after a hash round);
     *  - the small-frontier fast path: the un-pruned frontier holds at most
-    *    `denseCutoverFrontierFactor × bisectionThreshold` rows (by the
+    *    `DenseCutoverFrontierFactor × bisectionThreshold` rows (by the
     *    level's own counts, max of the two sides per segment), so bulk-
     *    fetching it NOW costs no more than a few leaf fetches and every
     *    further checksum level is pure overhead.
@@ -159,7 +151,7 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
     * the frontier still spans essentially the whole table, and cutting
     * over would bulk-fetch O(N) rows for an O(diff) job — at warehouse
     * scale, an outage rather than a diff. For the same reason a candidate
-    * cutover whose frontier is NOT small is only a candidate: the differ
+    * cutover whose frontier is NOT small is only a candidate: the engine
     * confirms density first by checksumming one level deeper on a strided
     * sample of split parents (one extra batch round-trip). Truly dense
     * tables keep their sampled children dirty and cut over; scattered
@@ -171,8 +163,8 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
       frontierRows: Long, bisectionThreshold: Int): Boolean =
     denseCutoverAfterLevels != Int.MaxValue &&
       (levelsDone >= denseCutoverAfterLevels ||
-        frontierRows <= denseCutoverFrontierFactor.toLong * bisectionThreshold) &&
-      pruned.toDouble / probed < denseCutoverPruneRate
+        frontierRows <= PushdownControl.DenseCutoverFrontierFactor.toLong * bisectionThreshold) &&
+      pruned.toDouble / probed < PushdownControl.DenseCutoverPruneRate
 
   @volatile private[this] var ignoredSet: Set[String] = Set.empty
   def ignoreColumn(cols: String*): Unit = ignoredSet ++= cols
@@ -194,109 +186,25 @@ class PushdownControl(val checksumWarnSeconds: Int = PushdownControl.DefaultChec
 object PushdownControl {
   /** Reference: table_segment.py:20 DEFAULT duration guardrail (~20 s). */
   val DefaultChecksumWarnSeconds = 20
+  /** Cumulative prune rate below which levels count as not pruning. */
+  val DenseCutoverPruneRate = 0.10
+  /** Small-frontier fast path bound, in units of `bisectionThreshold`
+    * rows (see denseCutover). */
+  val DenseCutoverFrontierFactor = 4
 }
 
-/** Cross-engine hashdiff: segment the key space, push per-segment
-  * `count + sum(md5_int48(normalized_row))` SQL to the remote engine, prune
-  * checksum-equal segments, bisect the rest, and leaf-fetch only differing
-  * rows for a local compare (reference control loop:
-  * data_diff/hashdiff_tables.py:169-264 + diff_tables.py:289-352).
-  *
-  * Spark-first deviations from the reference, both round-trip economics:
-  *  - the local side computes a whole batch of segment summaries in ONE
-  *    scan+shuffle (a broadcast range-join against a segment-bounds table
-  *    feeding a grouped checksum aggregate) instead of one query per segment;
-  *  - the remote side receives ONE grouped query per batch
-  *    (`SourceProfile.segmentedChecksumSql`) instead of per-segment queries
-  *    on a thread pool — batch latency is one round-trip regardless of
-  *    fan-out, which is what dominates remote bisection at scale.
-  *
-  * Batches are capped at `maxSegmentsPerQuery` segments (default 256): a
-  * level's frontier grows as dirty-segments × factor, so under a high diff
-  * rate (e.g. a schema-wide change) an uncapped level would render a
-  * nested CASE past Janino's 64 KB method limit locally and a statement
-  * past engine length limits remotely. The cap bounds every generated
-  * artifact — bucket-bounds broadcast, remote CASE, leaf OR-chain — at
-  * O(cap) while keeping the loop O(levels × ceil(frontier/cap)) round-trips.
-  * The range-join itself (not a CASE expression) assigns bucket ids, so the
-  * local plan never grows with the frontier at all.
-  *
-  * Leaf rows from every differing segment are fetched in capped batches and
-  * compared with one JoinDiffer pass.
+/** Cross-engine hashdiff of a Spark-readable segment against a remote table:
+  * the [[Bisection]] engine with a [[SparkSide]] as side a ('-') and a
+  * [[RemoteSide]] as side b ('+'). Checksum SQL is pushed to the remote,
+  * and only bucket summaries plus leaf rows cross the wire.
   */
 object PushdownDiffer {
 
-  /** Default control knobs (reference: hashdiff_tables.py:19-20;
-    * maxSegmentsPerQuery is this engine's own batching knob — the reference
-    * never batches because it issues per-segment queries). */
+  /** Default control knobs (reference: hashdiff_tables.py:19-20). */
   val DefaultBisectionFactor = 32
   val DefaultBisectionThreshold = 16 * 1024
-  val DefaultMaxSegmentsPerQuery = 256
-  private val MaxLevels = 64
-
-  /** One daemon thread carries the remote round-trip while the local Spark
-    * job runs on the caller's thread — the two sides of every level (and
-    * the initial key-range probe) overlap, so a level costs
-    * max(local, remote) instead of their sum. The analogue of the
-    * reference's per-database thread pools running both sides'
-    * count_and_checksum concurrently (databases/base.py:1222-1254,
-    * hashdiff_tables.py:169-215). A cached pool: idle between diffs, and
-    * engines serialize their own access (ProcessEngine.query is
-    * synchronized), so one in-flight remote call per engine is the cap.
-    */
-  private[sources] implicit lazy val remoteEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-pushdown-remote")
-        t.setDaemon(true)
-        t
-      }))
-
-  private def await[T](f: scala.concurrent.Future[T]): T =
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-
-  /** Collation folding is licensed only by verified strictly-[A-Za-z0-9]
-    * key content (see the fold comment in diffWithStats): one COUNT probe
-    * per text key on the remote, through the dialect's non-alnum predicate.
-    * A profile that cannot express the check refuses the fold — never
-    * assumes. Full-table by design: a sample is not a proof, and the probe
-    * is a single aggregate the remote runs at scan speed, paid only on the
-    * already-exceptional CI-collation path. */
-  private[sources] def requireStrictAlnumRemote(t: RemoteTable, keys: Seq[String]): Unit = {
-    val p = t.engine.profile
-    keys.foreach { k =>
-      val pred = p.nonAlnumPredicateSql(p.quote(k)).getOrElse(
-        throw new IllegalArgumentException(
-          s"case-insensitive collation fold refused: the ${p.name} profile cannot " +
-            s"verify key '$k' is strictly [A-Za-z0-9] (no non-alphanumeric probe), " +
-            "and characters like ' ', '-', '_' order differently under locale " +
-            "collations than in binary, so folded bounds could silently select " +
-            "different rows. Cast the key to a binary collation in the remote " +
-            "table/view, or diff on a derived ordinal key."))
-      val where = t.extraWhereSql.fold(pred)(e => s"($pred) AND ($e)")
-      val n = t.engine.query(s"SELECT COUNT(*) FROM ${t.table} WHERE $where")
-        .head.head.map(_.trim.toLong).getOrElse(0L)
-      if (n > 0) throw new IllegalArgumentException(
-        s"case-insensitive collation fold refused: key '$k' has $n remote value(s) " +
-          "outside [A-Za-z0-9] — ' ', '-' and '_' sort after 'Z' in binary order but " +
-          "before letters under locale collations, so no case fold makes the " +
-          "orderings agree. Cast the key to a binary collation in the remote " +
-          "table/view, or diff on a derived ordinal key.")
-    }
-  }
-
-  /** Local-side counterpart of [[requireStrictAlnumRemote]]: one
-    * column-pruned scan with limit-1 early exit over all candidate keys. */
-  private[sources] def requireStrictAlnumLocal(df: DataFrame, keys: Seq[String]): Unit =
-    if (keys.nonEmpty) {
-      val bad = df.select(keys.map(col): _*)
-        .where(keys.map(k => col(k).rlike("[^A-Za-z0-9]")).reduce(_ || _))
-      if (!bad.isEmpty) throw new IllegalArgumentException(
-        s"case-insensitive collation fold refused: local key(s) ${keys.mkString(", ")} " +
-          "contain values outside [A-Za-z0-9]; range bounds generated from them would " +
-          "not order the same way on the collated remote. Cast the key to a binary " +
-          "collation, or diff on a derived ordinal key.")
-    }
+  /** The engine's per-statement segment cap ([[Bisection.MaxSegmentsPerQuery]]). */
+  val DefaultMaxSegmentsPerQuery: Int = Bisection.MaxSegmentsPerQuery
 
   def diff(local: TableSegment, remote: RemoteTable,
       bisectionFactor: Int = DefaultBisectionFactor,
@@ -306,652 +214,8 @@ object PushdownDiffer {
   def diffWithStats(local: TableSegment, remote: RemoteTable,
       bisectionFactor: Int = DefaultBisectionFactor,
       bisectionThreshold: Int = DefaultBisectionThreshold,
-      maxSegmentsPerQuery: Int = DefaultMaxSegmentsPerQuery,
-      control: PushdownControl = new PushdownControl()): (DataFrame, PushdownStats) = {
-    require(bisectionFactor >= 2, "bisection factor must be >= 2")
-    require(bisectionFactor < bisectionThreshold,
-      "bisection factor must be lower than the threshold")
-    require(maxSegmentsPerQuery >= bisectionFactor,
-      "segment batch cap must fit at least one split fan-out")
-    require(local.keyCols == remote.keyCols,
-      s"key columns must match: ${local.keyCols} vs ${remote.keyCols}")
-
-    val spark = local.df.sparkSession
-    val profile = remote.engine.profile
-    val keyCols = local.keyCols
-    val relevant = local.relevantCols
-    val compare = relevant.filterNot(keyCols.contains)
-    require(remote.relevantCols == relevant,
-      s"compared columns must match: $relevant vs ${remote.relevantCols}")
-    require(local.fracPrecision == remote.fracPrecision && local.tsPrecision == remote.tsPrecision,
-      "both sides must normalize at the same mutual precision")
-    // text keys: segment bounds are STRING comparisons evaluated by both
-    // engines — the orderings must agree or segments select different row
-    // sets on each side (silent row loss). Spark compares UTF8-binary.
-    // When the remote collation is merely CASE-INSENSITIVE (the common
-    // warehouse misconfiguration — CI SQL Server collations, Derby
-    // TERRITORY_BASED:SECONDARY, DuckDB NOCASE), the diff still runs: both
-    // sides case-fold every SEGMENTATION artifact (range probes, segment
-    // bound predicates, the local range-join) so each key lands in the same
-    // segment on both engines — the reference's damage-absorbed conversion
-    // (abcs/database_types.py:52-100), emitted as UPPER() in the pushed SQL
-    // rather than a refusal. Checksums and the leaf compare stay on RAW
-    // values, so rows differing only in key case are still reported as the
-    // -/+ pair they genuinely are. The fold is sound ONLY on strictly
-    // [A-Za-z0-9] key values (binary and locale orders agree there: digits
-    // before letters, letters alphabetical) — the segmentable base-66
-    // alphabet also admits ' ', '-' and '_', which sort after 'Z' in binary
-    // order but before letters under UCA-style locale collations, so their
-    // presence is VERIFIED absent before folding: a column-pruned early-exit
-    // scan locally, one COUNT probe per key remotely (both full-data checks;
-    // a 64-row sample is not a proof). Accent sensitivity must be declared
-    // Some(true) — unknown accent behavior can reorder keys in ways no case
-    // fold repairs. Anything unverifiable refuses loudly.
-    // Beyond the CI fold: when the remote ordering is INCOMPARABLE with
-    // binary (locale/territory collations, undeclared accent behavior, CI
-    // keys whose content fails the alnum proof), segmentation switches to
-    // the HEX PROJECTION (SourceProfile.hexKeyProjectionSql): every
-    // segmentation artifact — range probe, mesh bounds, segment predicates,
-    // the local range-join — runs over the uppercase hex of the key's first
-    // 16 UTF-8 bytes, a fixed-width [0-9A-F] space where binary and every
-    // locale ordering agree by construction (and whose 32-hex values ride
-    // the existing 128-bit UUID key arithmetic, so generated bounds are
-    // always 32-hex too — never a base-66 split that could reintroduce
-    // collation-sensitive characters like '_'). Checksums and leaf rows
-    // stay RAW, exactly like the fold path. Keys sharing a 16-byte prefix
-    // tie into one projected value: both engines agree they tie, the box
-    // just can't split below the class and its rows leaf-compare together.
-    // Only a dialect with no UTF-8 hex rendering still refuses (the remedy
-    // the old error message prescribed, now built in — the reference's own
-    // keep-running damage absorption, abcs/database_types.py:52-100).
-    val stringKeys = remote.keyCols.filter(k => remote.schema(k).dataType == StringType)
-    val (foldKeyCols, hexKeyCols): (Set[String], Set[String]) =
-      if (stringKeys.isEmpty) (Set.empty, Set.empty)
-      else Collation.negotiate(Collation.SparkBinary, remote.keyCollation) match {
-        case Right(None) => (Set.empty, Set.empty) // equivalent ordinal orderings
-        case verdict =>
-          def refuse(why: String): Nothing = throw new IllegalArgumentException(
-            s"remote text-key collation is not ordinal and cannot be absorbed ($why), " +
-              s"and the ${profile.name} profile has no UTF-8 hex projection to segment " +
-              "on: key-range predicates would select different rows on each engine. " +
-              "Cast the key to a binary collation in the remote table/view, or diff " +
-              "on a derived ordinal key.")
-          val ciFoldEligible = verdict match {
-            case Right(Some(_)) => remote.keyCollation.caseSensitive.contains(false) &&
-              remote.keyCollation.accentSensitive.contains(true)
-            case _ => false // Left (incomparable); Right(None) already matched
-          }
-          val canProject = profile.hexKeyProjectionSql("x").isDefined
-          if (ciFoldEligible) {
-            // the fold is preferred when provable: raw-ish bounds keep the
-            // remote's own key-column statistics/indexes usable
-            try {
-              requireStrictAlnumLocal(local.df, stringKeys)
-              requireStrictAlnumRemote(remote, stringKeys)
-              (stringKeys.toSet, Set.empty[String])
-            } catch {
-              case e: IllegalArgumentException =>
-                if (canProject) (Set.empty[String], stringKeys.toSet)
-                else throw e // the fold refusal already names the remedy
-            }
-          } else if (canProject) (Set.empty[String], stringKeys.toSet)
-          else refuse("not case-insensitive-only with declared accent sensitivity")
-      }
-    /** Spark-side spelling of the hex projection — byte-identical to every
-      * profile's rendering: uppercase hex of the first 16 UTF-8 bytes,
-      * right-padded with '0' to 32. */
-    def hexProj(c: Column): Column =
-      rpad(substring(upper(hex(encode(c, "UTF-8"))), 1, 32), 32, "0")
-    def localKeyCol(k: String): Column =
-      if (foldKeyCols(k)) upper(col(k))
-      else if (hexKeyCols(k)) hexProj(col(k))
-      else col(k)
-    def remoteKeySql(k: String): String =
-      if (foldKeyCols(k)) s"UPPER(${profile.quote(k)})"
-      else if (hexKeyCols(k)) profile.hexKeyProjectionSql(profile.quote(k)).get
-      else profile.quote(k)
-
-    // ---- UUID casing alignment -------------------------------------------
-    // A lowercase-UUID side and an uppercase-UUID side must diff clean: when
-    // BOTH sides classify a text column as consistently-cased UUIDs, both
-    // render it casing-canonical before checksumming (reference:
-    // databases/base.py:884-887 normalize_uuid; casing metadata
-    // abcs/database_types.py:222-234). Remote classes come from
-    // introspection metadata; the local side uses its own field metadata
-    // when present, else the same 64-row sample refinement the remote ran.
-    // One uuid side + one non-uuid side stays raw text compare — the values
-    // genuinely differ in form and must be reported, not masked.
-    import graft.diff.SchemaTools
-    def tagIn(f: StructField): Option[String] =
-      if (f.metadata.contains(SchemaTools.StringClassKey))
-        Some(f.metadata.getString(SchemaTools.StringClassKey))
-      else None
-    val remoteUuidCols = relevant.filter(c =>
-      remote.schema(c).dataType == StringType &&
-        tagIn(remote.schema(c)).exists(_.startsWith("uuid")))
-    val uuidAligned: Set[String] =
-      if (remoteUuidCols.isEmpty) Set.empty
-      else {
-        val localSchema = local.df.schema
-        val explicit = remoteUuidCols.map(c => c -> tagIn(localSchema(c))).toMap
-        val toSample = remoteUuidCols.filter(c => explicit(c).isEmpty)
-        val sampled: Map[String, String] =
-          if (toSample.isEmpty) Map.empty
-          else SchemaTools.refineStringColumns(local.scoped, toSample)
-            .map { case (c, cls) => c -> SchemaTools.tagOf(cls) }
-        remoteUuidCols.filter { c =>
-          explicit(c).orElse(sampled.get(c)).exists(_.startsWith("uuid"))
-        }.toSet
-      }
-    val localAligned =
-      if (uuidAligned.isEmpty) local
-      else local.copy(df = local.df.select(local.df.columns.toSeq.map { c =>
-        if (uuidAligned(c))
-          col(c).as(c, new MetadataBuilder()
-            .putString(SchemaTools.StringClassKey, "uuid-lower").build())
-        else col(c)
-      }: _*))
-
-    // Overflow-safe concat is contagious: if either side's dialect needs it,
-    // both sides hash items before concatenation (reference:
-    // diff_tables.py:228-231).
-    val overflowSafe = profile.preventOverflowWhenConcat
-    def localChecksum(seg: TableSegment): Column = {
-      val rowCk = if (overflowSafe) Checksum.rowChecksumOverflowSafe(seg.normCols)
-                  else Checksum.rowChecksum(seg.normCols)
-      sum(rowCk.cast(DecimalType(38, 0)))
-    }
-
-    val normSqlByCol: Map[String, String] = relevant.map { c =>
-      c -> profile.normalizedColumnSql(c, remote.schema(c).dataType,
-        remote.fracPrecision, remote.tsPrecision,
-        stringClass = if (uuidAligned(c)) Some("uuid-lower") else None)
-    }.toMap
-
-    def outSchemaOf(cols: Seq[String]) =
-      StructType(cols.map(StructField(_, StringType, nullable = true)))
-    def emptyResult(stats: PushdownStats, cols: Seq[String] = relevant) = {
-      val empty = spark.createDataFrame(Seq.empty[Row].asJava,
-        StructType(StructField("sign", StringType, nullable = false) +: outSchemaOf(cols).fields.toSeq))
-      (empty, stats)
-    }
-
-    // ---- combined key range over both sides ----------------------------
-    // (reference: diff_tables.py:289-321 queries both ranges concurrently
-    // and takes the widest box, so rows present on only one side are
-    // always covered)
-    // hex-projected keys probe MIN/MAX of the PROJECTION in the remote SQL
-    // (a raw min under a locale collation is not the projected space's
-    // min); folded keys keep the raw probe + client-side fold (on verified
-    // single-case alphanumerics fold∘min ≡ min∘fold)
-    val remoteRangeF = scala.concurrent.Future(remote.engine
-      .query(profile.keyRangeExprsSql(remote.table,
-        keyCols.map(k => if (hexKeyCols(k)) remoteKeySql(k) else profile.quote(k)),
-        remote.extraWhereSql)).head)
-    // collation-converted keys probe their range in CONVERTED space locally
-    val localForRange =
-      if (foldKeyCols.isEmpty && hexKeyCols.isEmpty) local
-      else local.copy(df = local.df.select(local.df.columns.toSeq.map(c =>
-        if (foldKeyCols(c)) upper(col(c)).as(c)
-        else if (hexKeyCols(c)) hexProj(col(c)).as(c)
-        else col(c)): _*))
-    val localRange = localForRange.keyRange().head()
-    val remoteRange = await(remoteRangeF)
-    var remoteQueries = 1
-
-    val dims = keyCols.indices.map { i =>
-      // all four boundary values of a dim parse UNIFORMLY: a string column
-      // must pick UUID vs base-66 arithmetic ONCE across local and remote
-      // boundaries (a per-value choice could put a 128-bit "min" above a
-      // base-66 "max" and degenerate the bisection)
-      val raws: Seq[Any] = (Seq(Option(localRange.get(i * 2)), Option(localRange.get(i * 2 + 1))) ++
-        Seq(remoteRange(i * 2), remoteRange(i * 2 + 1))
-          .map(_.map[Any](s => remote.schema(keyCols(i)).dataType match {
-            case ByteType | ShortType | IntegerType | LongType => java.lang.Long.valueOf(s.trim.toLong)
-            // decimal surrogate keys: scale 0 joins the BigInt key space
-            // (reference: abcs/database_types.py:196-201 Decimal(precision=0)
-            // is an IKey); fractional-scale keys cannot segment exactly
-            case dt: DecimalType if dt.scale == 0 => new java.math.BigDecimal(s.trim)
-            case StringType =>
-              if (foldKeyCols(keyCols(i))) s.toUpperCase(java.util.Locale.ROOT) else s
-            case other => throw new IllegalArgumentException(
-              s"unsupported pushdown key type for ${keyCols(i)}: $other " +
-                "(decimal keys must have scale 0)")
-          }))).flatten
-      if (raws.isEmpty) None
-      else {
-        // raws = whole (min, max) pairs — a side is either fully present or
-        // fully absent — so even positions are mins, odd are maxs
-        // hex-projected dims parse DIRECTLY as 128-bit keys: values are
-        // 32-hex by construction, and the uniform-UUID heuristic must not
-        // get a vote (an all-digit hex value would read as "lowercase" and
-        // tip the set into base-66 arithmetic, whose splits can emit
-        // collation-sensitive bound characters). Overflow on `.next` is
-        // impossible: valid UTF-8 never contains a 0xFF byte, so a
-        // projected max is always below 2^128 − 1.
-        val keys =
-          if (hexKeyCols(keyCols(i))) raws.map(s => KeySpace.UuidKey(
-            BigInt(s.asInstanceOf[String], 16), uppercase = true, dashed = false))
-          else TableSegment.toKeys(raws)
-        val mins = keys.zipWithIndex.collect { case (k, j) if j % 2 == 0 => k }
-        val maxs = keys.zipWithIndex.collect { case (k, j) if j % 2 == 1 => k }
-        Some((mins.reduce((a, b) => if ((a - b) <= 0) a else b),
-          maxs.reduce((a, b) => if ((a - b) >= 0) a else b).next)) // exclusive hi
-      }
-    }
-    if (dims.exists(_.isEmpty))
-      return emptyResult(PushdownStats(0, 0, 0, 0, remoteQueries, 0)) // both sides empty
-
-    type Box = (Seq[KeySpace.Key], Seq[KeySpace.Key])
-    val rootBox: Box = (dims.map(_.get._1), dims.map(_.get._2))
-
-    def splitBox(box: Box): Seq[Box] = {
-      // the factor budgets the TOTAL child count: compound keys take the
-      // Nth root per dimension (reference: table_segment.py:189-197),
-      // floored at 2 so a split always narrows — factor-per-dimension
-      // would fan out factor^k children per level
-      val perDim =
-        if (box._1.size == 1) bisectionFactor
-        else math.max(2, math.pow(bisectionFactor.toDouble, 1.0 / box._1.size).toInt)
-      val grids = box._1.zip(box._2).map { case (lo, hi) =>
-        if (hi - lo < 2) Seq(lo, hi) else KeySpace.splitKeySpace(lo, hi, perDim)
-      }
-      KeySpace.createMeshFromPoints(grids)
-        .map { case (lo, hi) => (lo.values, hi.values) }
-    }
-
-    def boundVals(ks: Seq[KeySpace.Key]): Seq[Any] = ks.map(TableSegment.fromKey)
-    def remotePred(box: Box): String =
-      keyCols.zip(boundVals(box._1)).zip(boundVals(box._2)).map {
-        case ((k, lo), hi) =>
-          s"${remoteKeySql(k)} >= ${profile.literal(lo)} AND ${remoteKeySql(k)} < ${profile.literal(hi)}"
-      }.mkString(" AND ")
-
-    // ---- segment-bounds table + range-join bucket assignment ------------
-    // Bucket ids come from an inner range-join against a broadcast bounds
-    // table, not a nested CASE: a CASE grows one codegen branch per segment
-    // (past Janino's 64 KB method limit around a few thousand) while the
-    // join keeps the local plan constant-size at any batch width. Boxes are
-    // disjoint, so each row matches at most one bounds row.
-    val segField = "__graft_seg"
-    // bound columns take the LOCAL key column's family so the range-join
-    // compares without lossy casts: integral → LongType, decimal-keyed →
-    // DecimalType(38,0) (a Long bound would wrap past 2^63), text → string
-    val dimSparkTypes: Seq[DataType] = keyCols.zipWithIndex.map { case (k, d) =>
-      rootBox._1(d) match {
-        case KeySpace.IntKey(_) => local.df.schema(k).dataType match {
-          case _: DecimalType => DecimalType(38, 0)
-          case _ => LongType
-        }
-        case _ => StringType // uuid / alphanum keys render to string bounds
-      }
-    }
-    def boundVal(d: Int, k: KeySpace.Key): Any = (k, dimSparkTypes(d)) match {
-      case (KeySpace.IntKey(v), _: DecimalType) => new java.math.BigDecimal(v.bigInteger)
-      case _ => TableSegment.fromKey(k)
-    }
-    def boundsDf(chunk: Seq[Box]) = {
-      val fields = StructField(segField, IntegerType, nullable = false) +:
-        keyCols.indices.flatMap(d => Seq(
-          StructField(s"__graft_lo_$d", dimSparkTypes(d), nullable = false),
-          StructField(s"__graft_hi_$d", dimSparkTypes(d), nullable = false)))
-      val rows = chunk.zipWithIndex.map { case (box, i) =>
-        Row.fromSeq(i +: keyCols.indices.flatMap(d =>
-          Seq(boundVal(d, box._1(d)), boundVal(d, box._2(d)))))
-      }
-      spark.createDataFrame(rows.asJava, StructType(fields.toArray))
-    }
-    val rangeJoinCond: Column = keyCols.zipWithIndex.map { case (k, d) =>
-      localKeyCol(k) >= col(s"__graft_lo_$d") && localKeyCol(k) < col(s"__graft_hi_$d")
-    }.reduce(_ && _)
-    // coarse per-batch cover: the batch's bounding box is an O(dims)
-    // sargable predicate that reaches the scan (parquet min/max pruning);
-    // precise membership comes from the range join
-    def boundingBoxCond(chunk: Seq[Box]): Column = {
-      val lows = keyCols.indices.map(d =>
-        chunk.map(_._1(d)).reduce((a, b) => if ((a - b) <= 0) a else b))
-      val highs = keyCols.indices.map(d =>
-        chunk.map(_._2(d)).reduce((a, b) => if ((a - b) >= 0) a else b))
-      keyCols.zip(boundVals(lows)).zip(boundVals(highs)).map {
-        case ((k, lo), hi) => localKeyCol(k) >= lit(lo) && localKeyCol(k) < lit(hi)
-      }.reduce(_ && _)
-    }
-
-    // ---- leaf compare (shared by the end-of-loop path and progressive
-    // per-level emission) --------------------------------------------------
-    // All leaf rows cross the wire once, normalized (reference:
-    // table_segment.py:214-237 get_values), and a single join produces the
-    // -/+ rows (diff_sets, hashdiff_tables.py:30-88, expressed relationally).
-    // Local membership is the same broadcast range-join (constant-size plan
-    // at any leaf count); the remote fetch is batched so no statement
-    // enumerates more than maxSegmentsPerQuery leaf predicates.
-    var fetchedRows = 0L
-    def compareLeaves(leafSeq: Seq[Box], cmpCols: Seq[String]): DataFrame = {
-      val rel = keyCols ++ cmpCols
-      val localLeaf = localAligned.copy(extraCols = cmpCols)
-        .withExtraFilter(boundingBoxCond(leafSeq))
-      val localNorm = localLeaf.scoped
-        .join(broadcast(boundsDf(leafSeq)), rangeJoinCond)
-        .select(rel.zip(localLeaf.normCols).map { case (n, c) => c.as(n) }: _*)
-      val remoteDf = remote.engine.jdbcSource match {
-        case Some((url, props)) =>
-          // Partitioned fetch: normalization stays in the remote SQL (a
-          // derived table computing the SAME normalized projections the
-          // text protocol selects — parity is identical by construction),
-          // while Spark reads one partition per leaf predicate, so
-          // executors pull ranges in parallel instead of the coordinator
-          // draining one statement at a time. LOOPBACK HAZARD: if the
-          // "remote" is served by THIS Spark application (an in-process
-          // Thrift server), every task slot can end up holding a scan
-          // task blocked on a statement that needs a slot on the same
-          // scheduler — a deadlock, observed live at local[4]. Point the
-          // engine's jdbcSource at None (text drain) for loopback
-          // setups; a real remote warehouse has no such cycle.
-          // This is the fetch path that
-          // makes the dense-diff cutover scale: there the "leaves" are
-          // most of the table, and a single-threaded text drain would be
-          // the new bottleneck. Raw (folded) keys ride along under
-          // __graft_rk_* aliases purely for the partition predicates; no
-          // AS on the derived-table alias (Oracle rejects it).
-          val rk = keyCols.indices.map(d => s"__graft_rk_$d")
-          val sel = (rel.map(c => s"${normSqlByCol(c)} AS ${profile.quote(c)}") ++
-            keyCols.zip(rk).map { case (k, a) => s"${remoteKeySql(k)} AS ${profile.quote(a)}" })
-            .mkString(", ")
-          val inner = s"SELECT $sel FROM ${remote.table}" +
-            remote.extraWhereSql.fold("")(e => s" WHERE $e")
-          def rkPred(box: Box): String =
-            rk.zip(boundVals(box._1)).zip(boundVals(box._2)).map { case ((a, lo), hi) =>
-              s"${profile.quote(a)} >= ${profile.literal(lo)} AND ${profile.quote(a)} < ${profile.literal(hi)}"
-            }.mkString(" AND ")
-          remoteQueries += 1 // one logical scan (N partition reads)
-          val fetched = spark.read.jdbc(url, s"($inner) g", leafSeq.map(rkPred).toArray, props)
-            .drop(rk: _*)
-            .persist() // pin: a task retry must re-read blocks, not the remote
-          fetchedRows += fetched.count()
-          fetched
-        case None =>
-          val fetched = leafSeq.grouped(maxSegmentsPerQuery).toSeq.flatMap { lchunk =>
-            val leafOr = lchunk.map(b => s"(${remotePred(b)})").mkString(" OR ")
-            val fetchSql = profile.selectNormalizedSql(remote.table,
-              rel.map(c => (normSqlByCol(c), c)),
-              Some(remote.extraWhereSql.fold(s"($leafOr)")(e => s"($leafOr) AND ($e)")))
-            remoteQueries += 1
-            remote.engine.query(fetchSql)
-          }
-          fetchedRows += fetched.size
-          spark.createDataFrame(
-            fetched.map(r => Row(r.map(_.orNull): _*)).asJava, outSchemaOf(rel))
-      }
-      JoinDiffer.diff(localNorm, remoteDf, keyCols, cmpCols)
-    }
-
-    // ---- level-at-a-time bisection, batched at maxSegmentsPerQuery -------
-    type Summary = (Long, Option[BigDecimal])
-    val leaves = ArrayBuffer.empty[Box]
-    val emitted = ArrayBuffer.empty[DataFrame]
-    // Data-driven splitting (control.quantileSeed): cut every box that
-    // needs splitting — the root at level 0, dirty parents at each deeper
-    // level — at its own sampled LOCAL row-quantiles instead of
-    // arithmetic mid-widths (see the knob's doc). ALL parents of a level
-    // split in ONE Spark job: sampled keys range-join the parent bounds,
-    // one ntile window partitioned by parent assigns buckets, and the
-    // min key of buckets 2..factor are the parent's checkpoints (driver
-    // traffic: ≤ parents × (factor−1) values). Checkpoints parse through
-    // the same uniform key arithmetic as the root bounds (hex-projected
-    // keys parse as 128-bit hex directly — the uniform-UUID heuristic
-    // must not see them), are clamped strictly inside the parent and
-    // deduped; parents with no usable checkpoints (e.g. dirty only from
-    // remote-only rows the local side cannot see) fall back to the
-    // arithmetic split. Splits only refine HOW a box is partitioned,
-    // never its coverage, so correctness is untouched by construction.
-    val quantileActive = control.quantileSeed && keyCols.size == 1
-    def quantileSplitAll(cands: Seq[(Box, Long)]): Map[Box, Seq[Box]] =
-      if (!quantileActive || cands.isEmpty) Map.empty
-      else {
-        val k = keyCols.head
-        val boxes = cands.map(_._1)
-        // Per-parent sampling modulus: each parent samples ~factor·200 of
-        // ITS OWN keys. One global modulus sized from the largest parent
-        // would sample ~0 keys from small parents in the same level
-        // (1e9-row parent next to 2e4-row parents → mod ~156k → 0.13
-        // sampled keys) and silently push them to the arithmetic
-        // fallback. The mod rides the broadcast bounds table and filters
-        // AFTER the range join assigns the parent.
-        val modRows = cands.zipWithIndex.map { case ((_, rows), i) =>
-          Row(i, math.max(1L, rows / (bisectionFactor.toLong * 200))) }
-        val modDf = spark.createDataFrame(modRows.asJava, StructType(Array(
-          StructField("__modseg", IntegerType, nullable = false),
-          StructField("__mod", LongType, nullable = false))))
-        val boundsM = boundsDf(boxes)
-          .join(modDf, col(segField) === col("__modseg")).drop("__modseg")
-        val cond = col("__ck") >= col("__graft_lo_0") && col("__ck") < col("__graft_hi_0")
-        // bounding-box pre-filter: the sargable cover predicate reaches
-        // the scan (parquet min/max pruning), so a late-level sampling
-        // pass reads only the frontier's slice of the table, mirroring
-        // the checksum batches' own scoping
-        val sampled = localAligned
-          .withExtraFilter(boundingBoxCond(boxes)).scoped
-          .select(localKeyCol(k).as("__ck"),
-            graft.functions.Md5Bits48.head(col(k).cast("string")).as("__h"))
-          .join(broadcast(boundsM), cond)
-          .where(pmod(col("__h"), col("__mod")) === 0)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(segField)).orderBy(col("__ck"))
-        val cpRows = sampled
-          .withColumn("__b", ntile(bisectionFactor).over(w))
-          .where(col("__b") > 1)
-          .groupBy(col(segField), col("__b")).agg(min(col("__ck")).as("cp"))
-          .collect()
-        val bySeg: Map[Int, Seq[Any]] = cpRows.groupBy(_.getInt(0))
-          .view.mapValues(_.sortBy(_.getInt(1)).map(_.get(2)).toSeq.distinct).toMap
-        cands.zipWithIndex.flatMap { case ((box, _), i) =>
-          // A checkpoint VALUE the key arithmetic cannot represent (a
-          // sampled string with characters outside base-66 — dots,
-          // non-ASCII — when the min/max happened to parse) must not
-          // kill the diff: that parent just falls back to the
-          // arithmetic split (None here → getOrElse(splitBox) below).
-          bySeg.get(i).flatMap { raw =>
-            scala.util.Try {
-              val (lo, hi) = (box._1.head, box._2.head)
-              val cpKeys: Seq[KeySpace.Key] =
-                if (hexKeyCols(k)) raw.map(s => KeySpace.UuidKey(
-                  BigInt(s.asInstanceOf[String], 16), uppercase = true, dashed = false))
-                else TableSegment.toKeys(
-                  Seq(TableSegment.fromKey(lo), TableSegment.fromKey(hi)) ++ raw).drop(2)
-              val interior = cpKeys.filter(c => (c - lo) > 0 && (hi - c) > 0)
-                .distinct.sortWith((a, b) => (a - b) < 0)
-              if (interior.isEmpty) None
-              else Some(box -> ((lo +: interior) :+ hi).sliding(2)
-                .map(p => (Seq(p(0)), Seq(p(1)))).toSeq)
-            }.toOption.flatten
-          }
-        }.toMap
-      }
-    /** Children for every split candidate: quantile where usable,
-      * arithmetic otherwise. */
-    def splitBoxes(cands: Seq[(Box, Long)]): Seq[(Box, Seq[Box])] = {
-      val byQuantile = quantileSplitAll(cands)
-      cands.map { case (box, _) => box -> byQuantile.getOrElse(box, splitBox(box)) }
-    }
-    var frontier: Seq[Box] =
-      if (quantileActive) {
-        // level-0 seed: the root box through the same splitter; the mod
-        // sizing needs a row count — one column-pruned pass
-        val n = localAligned.scoped.select(col(keyCols.head)).count()
-        splitBoxes(Seq((rootBox, math.max(1L, n)))).head._2
-      } else splitBox(rootBox)
-    var level = 0
-    var probed = 0
-    var pruned = 0
-    var cutoverAt: Option[Int] = None
-    val levelMillis = ArrayBuffer.empty[Long]
-
-    while (frontier.nonEmpty) {
-      require(level < MaxLevels, s"bisection did not converge after $MaxLevels levels")
-      val levelSegments = frontier.size
-      val prunedAtStart = pruned
-      val leavesAtStart = leaves.size
-      val levelStart = System.nanoTime()
-      probed += levelSegments
-
-      // re-plan per level: columns dropped via control.ignoreColumn since
-      // the previous level leave the checksums NOW (reference re-plans the
-      // same way, diff_tables.py:196-199)
-      val activeCompare = compare.filterNot(control.ignored)
-      val activeRelevant = keyCols ++ activeCompare
-      val levelSeg = localAligned.copy(extraCols = activeCompare)
-
-      val next = ArrayBuffer.empty[Box]
-      val splitParents = ArrayBuffer.empty[Box]
-      // parents needing a split this level, with their larger side count —
-      // split together AFTER the chunk loop so the quantile path cuts
-      // every parent in one Spark job
-      val splitCands = ArrayBuffer.empty[(Box, Long)]
-      // upper bound on rows in the next frontier: each split parent's
-      // larger side count (its children hold exactly its rows)
-      var nextFrontierRows = 0L
-      frontier.grouped(maxSegmentsPerQuery).foreach { chunk =>
-        // one remote round-trip for the batch, launched FIRST so it overlaps
-        // the local Spark job below (level cost = max of the sides, not sum)
-        val sql = profile.segmentedChecksumSql(remote.table,
-          activeRelevant.map(normSqlByCol), chunk.map(remotePred), remote.extraWhereSql)
-        val remoteF = scala.concurrent.Future {
-          remote.engine.query(sql).map { r =>
-            r(0).get.trim.toInt -> ((r(1).get.trim.toLong: Long),
-              r(2).map(s => BigDecimal(s.trim)))
-          }.toMap
-        }
-
-        // one Spark job for this batch of segment summaries
-        val scopedChunk = levelSeg.withExtraFilter(boundingBoxCond(chunk))
-        val localRows = scopedChunk.scoped
-          .join(broadcast(boundsDf(chunk)), rangeJoinCond)
-          .groupBy(col(segField).as("seg"))
-          .agg(count(lit(1)).as("cnt"), localChecksum(scopedChunk).as("checksum"))
-          .collect()
-        val localMap: Map[Int, Summary] = localRows.map { r =>
-          r.getInt(0) -> (r.getLong(1),
-            if (r.isNullAt(2)) None else Some(BigDecimal(r.getDecimal(2))))
-        }.toMap
-
-        val remoteMap: Map[Int, Summary] = await(remoteF)
-        remoteQueries += 1
-
-        if (sys.env.contains("GRAFT_PD_DEBUG")) {
-          println(s"DBG level $level local=$localMap")
-          println(s"DBG level $level remote=$remoteMap")
-        }
-        chunk.zipWithIndex.foreach { case (box, i) =>
-          val l = localMap.getOrElse(i, (0L, None: Option[BigDecimal]))
-          val r = remoteMap.getOrElse(i, (0L, None: Option[BigDecimal]))
-          if (l == r) pruned += 1
-          else if (math.max(l._1, r._1) < bisectionThreshold) leaves += box
-          else splitCands += ((box, math.max(l._1, r._1)))
-        }
-      }
-      splitBoxes(splitCands.toSeq).zip(splitCands).foreach {
-        case ((box, children), (_, rows)) =>
-          if (children.size <= 1) leaves += box // key space too small to cut
-          else {
-            next ++= children; splitParents += box
-            nextFrontierRows += rows
-          }
-      }
-      frontier = next.toSeq
-      // dense-diff cutover (see PushdownControl.denseCutover): sustained
-      // non-pruning levels (or a provably tiny frontier) → the table
-      // differs everywhere bisection can see, so stop paying for checksums
-      // that cannot prune and bulk-fetch the remainder as leaves instead.
-      // Granularity follows the fetch path:
-      // the text protocol takes the PARENT boxes (same rows, factor× fewer
-      // range predicates in the one bulk statement), while a JDBC-reachable
-      // engine keeps the just-split children — there each predicate becomes
-      // one partition of the parallel spark.read.jdbc scan, and in the
-      // dense regime the fetch is most of the table, so partition count is
-      // the parallelism.
-      if (frontier.nonEmpty && control.denseCutover(level + 1, probed, pruned,
-          nextFrontierRows, bisectionThreshold)) {
-        // Candidate cutover. A small frontier is safe to fetch outright;
-        // otherwise confirm density by checksumming the children of a
-        // strided sample of split parents (one batch): dense tables keep
-        // every child dirty, scattered diffs prune most children clean and
-        // the veto keeps the loop bisecting (see PushdownControl
-        // .denseCutover).
-        val smallFrontier = nextFrontierRows <=
-          control.denseCutoverFrontierFactor.toLong * bisectionThreshold
-        val confirmed = smallFrontier || {
-          val maxParents = math.max(1, maxSegmentsPerQuery / bisectionFactor)
-          val stride = math.max(1, splitParents.size / maxParents)
-          val sample = splitParents.indices
-            .collect { case i if i % stride == 0 => splitParents(i) }
-            .take(maxParents)
-          val children = sample.flatMap(splitBox)
-          val sql = profile.segmentedChecksumSql(remote.table,
-            activeRelevant.map(normSqlByCol), children.map(remotePred),
-            remote.extraWhereSql)
-          val remoteF = scala.concurrent.Future {
-            remote.engine.query(sql).map { r =>
-              r(0).get.trim.toInt -> ((r(1).get.trim.toLong: Long),
-                r(2).map(s => BigDecimal(s.trim)))
-            }.toMap
-          }
-          val probeSeg = levelSeg.withExtraFilter(boundingBoxCond(children))
-          val localMap: Map[Int, Summary] = probeSeg.scoped
-            .join(broadcast(boundsDf(children)), rangeJoinCond)
-            .groupBy(col(segField).as("seg"))
-            .agg(count(lit(1)).as("cnt"), localChecksum(probeSeg).as("checksum"))
-            .collect().map { r =>
-              r.getInt(0) -> ((r.getLong(1): Long),
-                if (r.isNullAt(2)) None else Some(BigDecimal(r.getDecimal(2))))
-            }.toMap
-          val remoteMap: Map[Int, Summary] = await(remoteF)
-          remoteQueries += 1
-          val clean = children.indices.count(i =>
-            localMap.getOrElse(i, (0L, None: Option[BigDecimal])) ==
-              remoteMap.getOrElse(i, (0L, None: Option[BigDecimal])))
-          clean.toDouble / children.size < control.denseCutoverPruneRate
-        }
-        if (confirmed) {
-          cutoverAt = Some(level)
-          leaves ++= (if (remote.engine.jdbcSource.isDefined) frontier else splitParents)
-          frontier = Seq.empty
-        }
-      }
-      levelMillis += (System.nanoTime() - levelStart) / 1000000
-      control.onLevel(PushdownLevel(level, levelSegments, pruned - prunedAtStart, levelMillis.last))
-      // progressive: this level's fresh leaves are compared NOW, while the
-      // next level's frontier is still uncooked — rows reach the caller
-      // before the loop finishes
-      if (control.progressive && leaves.size > leavesAtStart) {
-        val levelLeaves = leaves.slice(leavesAtStart, leaves.size).toSeq
-        val df = compareLeaves(levelLeaves, activeCompare)
-        emitted += df
-        control.onLeafDiff(level, df)
-      }
-      level += 1
-    }
-
-    // the (final) leaf compare runs on whatever survived mid-flight drops
-    val finalCompare = compare.filterNot(control.ignored)
-    val finalRelevant = keyCols ++ finalCompare
-    val droppedCols = compare.filterNot(finalCompare.contains)
-    val stats = PushdownStats(level, probed, pruned, leaves.size, remoteQueries,
-      fetchedRows, levelMillis.toSeq, droppedCols, cutoverAt)
-
-    if (control.progressive) {
-      // every leaf was already compared (and emitted) per level; the return
-      // value is their union projected onto the final column set — columns
-      // dropped after a level was emitted are dropped here too, so the
-      // DataFrame unions cleanly
-      if (emitted.isEmpty) return emptyResult(stats, finalRelevant)
-      val out = emitted.map(df =>
-        df.select(("sign" +: finalRelevant).map(col): _*)).reduce(_ union _)
-      return (out, stats)
-    }
-
-    if (leaves.isEmpty) return emptyResult(stats, finalRelevant)
-    val out = compareLeaves(leaves.toSeq, finalCompare)
-    (out, PushdownStats(level, probed, pruned, leaves.size, remoteQueries,
-      fetchedRows, levelMillis.toSeq, droppedCols, cutoverAt))
-  }
+      control: PushdownControl = new PushdownControl()): (DataFrame, PushdownStats) =
+    Bisection.diff(SparkSide(local), RemoteSide(local.df.sparkSession, remote),
+      bisectionFactor, bisectionThreshold, control)
 }
+

@@ -1,607 +1,21 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
-
-import graft.diff.{JoinDiffer, KeySpace, TableSegment}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-engine hashdiff where NEITHER side is Spark-readable — the
   * reference's primary scenario (postgres ↔ mysql,
-  * data_diff/hashdiff_tables.py:88-264): both engines receive the same
-  * batched grouped-checksum SQL in their own dialect, checksum-equal
-  * segments are pruned, mismatches bisect, and only leaf rows of differing
-  * segments are downloaded (normalized, from both sides) for the final
-  * local compare. Spark acts purely as the coordinator and the leaf-compare
-  * engine; per level each side's round-trip runs on its own thread, so a
-  * level costs max(a, b), not their sum.
-  *
-  * Leaf volume is bounded by differing-regions × bisectionThreshold while
-  * the loop bisects — the same bound the reference's download path has —
-  * so the driver holds no more than the diff neighborhood. The DENSE
-  * CUTOVER deliberately exceeds that bound (its leaves are most of the
-  * table): JDBC-reachable engines then fetch as a partitioned
-  * spark.read.jdbc scan (rows go straight to executors), and only pure
-  * text-protocol engines still drain through the coordinator.
-  *
-  * Both sides MUST normalize at the same negotiated precision
+  * data_diff/hashdiff_tables.py:88-264): the [[Bisection]] engine with two
+  * [[RemoteSide]]s, Spark only coordinating and comparing downloaded leaf
+  * rows. Both sides MUST normalize at the same negotiated precision
   * (`Graft.diffRemotes` introspects and aligns; this low-level entry
   * requires it) and their checksum renderings must be bit-compatible —
-  * which is exactly the `SourceProfile` contract.
-  *
-  * Under `PushdownControl.quantileSeed` (the default) the root box and
-  * every level's dirty parents split at DATA quantiles estimated from a
-  * deterministic dialect-level sample pushed to the larger engine
-  * (`sampleSql` ordered by md5-of-key; see `quantileSplitAll`) instead of
-  * arithmetic mid-widths — the remote↔remote counterpart of
-  * PushdownDiffer's local quantile seeding, saving whole bisection levels
-  * (each a remote round-trip on BOTH engines) on sparse/clustered key
-  * spaces the reference splits arithmetically (data_diff/utils.py:321-324).
-  */
+  * which is exactly the `SourceProfile` contract. */
 object RemoteRemoteDiffer {
-
-  // shared with PushdownDiffer: one cached daemon pool per JVM carries all
-  // remote round-trips (engines serialize their own access)
-  private implicit def ec: scala.concurrent.ExecutionContext = PushdownDiffer.remoteEc
-  private def await[T](f: scala.concurrent.Future[T]): T =
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   def diff(spark: SparkSession, a: RemoteTable, b: RemoteTable,
       bisectionFactor: Int = PushdownDiffer.DefaultBisectionFactor,
       bisectionThreshold: Int = PushdownDiffer.DefaultBisectionThreshold,
-      maxSegmentsPerQuery: Int = PushdownDiffer.DefaultMaxSegmentsPerQuery,
-      control: PushdownControl = new PushdownControl()): (DataFrame, PushdownStats) = {
-    require(bisectionFactor >= 2 && bisectionFactor < bisectionThreshold,
-      "need 2 <= bisectionFactor < bisectionThreshold")
-    require(maxSegmentsPerQuery >= bisectionFactor,
-      "segment batch cap must fit at least one split fan-out")
-    require(a.keyCols == b.keyCols, s"key columns must match: ${a.keyCols} vs ${b.keyCols}")
-    require(a.relevantCols == b.relevantCols,
-      s"compared columns must match: ${a.relevantCols} vs ${b.relevantCols}")
-    require(a.fracPrecision == b.fracPrecision && a.tsPrecision == b.tsPrecision,
-      "both sides must normalize at the same mutual precision (Graft.diffRemotes aligns)")
-    val keyCols = a.keyCols
-    keyCols.foreach { k =>
-      require(a.schema(k).dataType == b.schema(k).dataType,
-        s"key $k maps to different logical types: ${a.schema(k).dataType} vs ${b.schema(k).dataType}")
-    }
-    // text keys: BOTH engines evaluate the same string range predicates —
-    // orderings must agree with each other (and with the coordinator's
-    // binary order, which generated the bounds). A side whose collation is
-    // case-insensitive ONLY is absorbed the same way PushdownDiffer does:
-    // every segmentation artifact folds through UPPER() — and it must fold
-    // on BOTH sides, because bounds generated in folded space would
-    // mis-select raw mixed-case keys on the ordinal side. Checksums and
-    // leaf rows stay raw, so case-only key differences are still reported.
-    // The fold is sound only on strictly [A-Za-z0-9] key values (' ', '-',
-    // '_' from the base-66 key alphabet order differently under locale
-    // collations than in binary), so BOTH sides are probed before folding —
-    // bounds come from both sides' data and both engines evaluate the
-    // folded predicates. Accent sensitivity must be declared Some(true);
-    // damage beyond case (accent-insensitive, unknown locales) refuses.
-    // Incomparable orderings fall back to the HEX PROJECTION exactly like
-    // PushdownDiffer (see the decision comment there): both engines
-    // segment over the uppercase hex of the key's first 16 UTF-8 bytes —
-    // BOTH sides must render the projection (it is the shared key space),
-    // so both profiles need hexKeyProjectionSql. Checksums/leaf rows stay
-    // raw. Refusal remains only when a side's dialect cannot project.
-    val stringKeys = keyCols.filter(k => a.schema(k).dataType == StringType)
-    val (foldKeyCols, hexKeyCols): (Set[String], Set[String]) =
-      if (stringKeys.isEmpty) (Set.empty, Set.empty)
-      else {
-        val verdicts = Seq(a, b).map(t =>
-          (t, Collation.negotiate(Collation.SparkBinary, t.keyCollation)))
-        if (verdicts.forall(_._2 == Right(None))) (Set.empty, Set.empty)
-        else {
-          val ciFoldEligible = verdicts.forall {
-            case (_, Right(None)) => true
-            case (t, Right(Some(_))) => t.keyCollation.caseSensitive.contains(false) &&
-              t.keyCollation.accentSensitive.contains(true)
-            case (_, Left(_)) => false
-          }
-          val cantProject = Seq(a, b)
-            .filter(_.engine.profile.hexKeyProjectionSql("x").isEmpty)
-          def project(): (Set[String], Set[String]) =
-            if (cantProject.isEmpty) (Set.empty[String], stringKeys.toSet)
-            else throw new IllegalArgumentException(
-              "text-key collations are not mutually ordinal and cannot be absorbed, " +
-                s"and profile(s) ${cantProject.map(_.engine.profile.name).mkString(", ")} " +
-                "have no UTF-8 hex projection to segment on: key-range predicates " +
-                "would select different rows per engine. Cast the key to a binary " +
-                "collation, or diff on a derived ordinal key.")
-          if (ciFoldEligible) {
-            try {
-              PushdownDiffer.requireStrictAlnumRemote(a, stringKeys)
-              PushdownDiffer.requireStrictAlnumRemote(b, stringKeys)
-              (stringKeys.toSet, Set.empty[String])
-            } catch {
-              case e: IllegalArgumentException =>
-                if (cantProject.isEmpty) project() else throw e
-            }
-          } else project()
-        }
-      }
-    val compare = a.relevantCols.filterNot(keyCols.contains)
-
-    // UUID casing alignment: only when BOTH sides' introspection classified
-    // the column as consistently-cased UUID text (one-sided stays raw —
-    // the values genuinely differ in form and must be reported)
-    import graft.diff.SchemaTools
-    def uuidTag(t: RemoteTable, c: String): Boolean = {
-      val f = t.schema(c)
-      f.dataType == StringType && f.metadata.contains(SchemaTools.StringClassKey) &&
-        f.metadata.getString(SchemaTools.StringClassKey).startsWith("uuid")
-    }
-    // Mutual normalization KIND per column: two catalogs can map the same
-    // data to different numeric kinds (BIGINT vs NUMBER(18,0)); rendering
-    // one side through the integer branch ("5") and the other through the
-    // decimal branch ("5.00") would mismatch EVERY checksum, defeat all
-    // pruning, and report every row as a spurious -/+ pair. Both-integral
-    // pairs keep the integer rendering; any fractional side forces the
-    // decimal rendering on both (CASTing an integer column to
-    // DECIMAL(38,p) is valid in every dialect); kind mismatches beyond
-    // numeric refuse loudly.
-    def mutualDt(c: String): DataType = {
-      val (ta, tb) = (a.schema(c).dataType, b.schema(c).dataType)
-      def kind(t: DataType): String = t match {
-        case TimestampType | TimestampNTZType => "ts"
-        case DateType => "date"
-        case DoubleType | FloatType | _: DecimalType => "frac"
-        case ByteType | ShortType | IntegerType | LongType => "int"
-        case BooleanType => "bool"
-        case StringType => "str"
-        case _ => "other"
-      }
-      (kind(ta), kind(tb)) match {
-        case (x, y) if x == y => ta
-        case ("int", "frac") | ("frac", "int") => DecimalType(38, a.fracPrecision)
-        case _ => throw new IllegalArgumentException(
-          s"column $c maps to incompatible kinds across engines: $ta vs $tb — " +
-            "restrict the compare (--columns/--ignore) or cast in a remote view")
-      }
-    }
-    def normSql(t: RemoteTable): Map[String, String] = t.relevantCols.map { c =>
-      c -> t.engine.profile.normalizedColumnSql(c, mutualDt(c),
-        t.fracPrecision, t.tsPrecision,
-        stringClass = if (uuidTag(a, c) && uuidTag(b, c)) Some("uuid-lower") else None)
-    }.toMap
-    val (normA, normB) = (normSql(a), normSql(b))
-    // overflow-safe concat mode must agree — the reference negotiates it
-    // contagiously (diff_tables.py:228-231); these profiles render concat
-    // per their own fixed mode, so a mixed pairing refuses loudly rather
-    // than silently producing incomparable checksums
-    require(a.engine.profile.preventOverflowWhenConcat ==
-        b.engine.profile.preventOverflowWhenConcat,
-      "overflow-safe concat must be negotiated to the same mode on both profiles " +
-        "(pair the overflow-safe engine with a like-moded profile, or diff each " +
-        "against a common Spark-readable staging copy)")
-    // UUID-aligned KEY columns segment in LOWERED space: checksums and the
-    // leaf join already compare them lowercased, so cutting segments on
-    // RAW values would put the same logical row in different boxes per
-    // side — nothing would ever prune, and in progressive mode the two
-    // boxes can leaf at different levels and emit a spurious -/+ pair for
-    // an identical row. (Fold/hex collation handling takes precedence:
-    // those already define the shared segmentation space.)
-    val uuidSegKeyCols: Set[String] = keyCols.filter(k =>
-      uuidTag(a, k) && uuidTag(b, k) && !foldKeyCols(k) && !hexKeyCols(k)).toSet
-
-    // Converted keys probe MIN/MAX of the CONVERSION in each side's own
-    // SQL — hex keys probe the projection, folded keys probe UPPER(k),
-    // uuid-aligned keys probe LOWER(k). Probing raw and converting
-    // client-side would be wrong: fold∘min ≠ min∘fold under binary order
-    // (binary min "ZEBRA" of {"ZEBRA","apple"} folds to "ZEBRA", but the
-    // folded space's min is "APPLE"), so a raw probe can build a root box
-    // that EXCLUDES rows and silently under-reports the diff.
-    // the per-dialect segmentation-space rendering of a key column — the
-    // ONE spelling shared by range probes, segment predicates, leaf-fetch
-    // aliases and the quantile sampling below
-    def segKeySql(t: RemoteTable, k: String): String = {
-      val p = t.engine.profile
-      if (foldKeyCols(k)) s"UPPER(${p.quote(k)})"
-      else if (hexKeyCols(k)) p.hexKeyProjectionSql(p.quote(k)).get
-      else if (uuidSegKeyCols(k)) s"LOWER(${p.quote(k)})"
-      else p.quote(k)
-    }
-    def rangeOf(t: RemoteTable) = scala.concurrent.Future {
-      val p = t.engine.profile
-      t.engine.query(p.keyRangeExprsSql(t.table,
-        keyCols.map(segKeySql(t, _)), t.extraWhereSql)).head
-    }
-    val (rangeAF, rangeBF) = (rangeOf(a), rangeOf(b))
-    val (rangeA, rangeB) = (await(rangeAF), await(rangeBF))
-    var queries = 2
-
-    def parseKey(k: String, s: String): Any = a.schema(k).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => java.lang.Long.valueOf(s.trim.toLong)
-      case dt: DecimalType if dt.scale == 0 => new java.math.BigDecimal(s.trim)
-      case StringType =>
-        if (foldKeyCols(k)) s.toUpperCase(java.util.Locale.ROOT)
-        else if (uuidSegKeyCols(k)) s.toLowerCase(java.util.Locale.ROOT)
-        else s
-      case other => throw new IllegalArgumentException(
-        s"unsupported key type for $k: $other (decimal keys must have scale 0)")
-    }
-    val dims = keyCols.zipWithIndex.map { case (k, i) =>
-      val raws: Seq[Any] =
-        (Seq(rangeA(i * 2), rangeA(i * 2 + 1), rangeB(i * 2), rangeB(i * 2 + 1))
-          .flatten).map(parseKey(k, _))
-      if (raws.isEmpty) None
-      else {
-        // hex-projected dims parse directly as 128-bit keys (see the same
-        // comment in PushdownDiffer — the uniform-UUID heuristic must not
-        // tip all-digit hex values into base-66 arithmetic)
-        val keys =
-          if (hexKeyCols(k)) raws.map(s => KeySpace.UuidKey(
-            BigInt(s.asInstanceOf[String], 16), uppercase = true, dashed = false))
-          else TableSegment.toKeys(raws)
-        val mins = keys.zipWithIndex.collect { case (x, j) if j % 2 == 0 => x }
-        val maxs = keys.zipWithIndex.collect { case (x, j) if j % 2 == 1 => x }
-        Some((mins.reduce((x, y) => if ((x - y) <= 0) x else y),
-          maxs.reduce((x, y) => if ((x - y) >= 0) x else y).next))
-      }
-    }
-    def outSchema(cols: Seq[String]) =
-      StructType(StructField("sign", StringType, nullable = false) +:
-        cols.map(StructField(_, StringType, nullable = true)))
-    if (dims.exists(_.isEmpty))
-      // honor pre-call ignoreColumn drops like the other empty paths, so
-      // result schemas line up across runs
-      return (spark.createDataFrame(Seq.empty[Row].asJava,
-        outSchema(keyCols ++ compare.filterNot(control.ignored))),
-        PushdownStats(0, 0, 0, 0, queries, 0))
-
-    type Box = (Seq[KeySpace.Key], Seq[KeySpace.Key])
-    val rootBox: Box = (dims.map(_.get._1), dims.map(_.get._2))
-    def splitBox(box: Box): Seq[Box] = {
-      // Nth-root-per-dimension like PushdownDiffer.splitBox (reference:
-      // table_segment.py:189-197), floored at 2 for progress
-      val perDim =
-        if (box._1.size == 1) bisectionFactor
-        else math.max(2, math.pow(bisectionFactor.toDouble, 1.0 / box._1.size).toInt)
-      val grids = box._1.zip(box._2).map { case (lo, hi) =>
-        if (hi - lo < 2) Seq(lo, hi) else KeySpace.splitKeySpace(lo, hi, perDim)
-      }
-      KeySpace.createMeshFromPoints(grids).map { case (lo, hi) => (lo.values, hi.values) }
-    }
-    def pred(t: RemoteTable, box: Box): String = {
-      val p = t.engine.profile
-      keyCols.zip(box._1.map(TableSegment.fromKey)).zip(box._2.map(TableSegment.fromKey))
-        .map { case ((k, lo), hi) =>
-          s"${segKeySql(t, k)} >= ${p.literal(lo)} AND ${segKeySql(t, k)} < ${p.literal(hi)}" }
-        .mkString(" AND ")
-    }
-
-    // ---- quantile seeding (control.quantileSeed) --------------------------
-    // Remote↔remote has no Spark-readable side to sample, so split
-    // checkpoints come from a DIALECT-LEVEL deterministic sample on the
-    // LARGER engine: `sampleSql(keyExpr, n, where = parent range, orderBy =
-    // md5-of-key)` — ORDER BY the key's md5 hex turns the remote's top-n
-    // into a uniform pseudo-random sample of the parent's rows that is
-    // deterministic across runs (same rows → same sample → same splits).
-    // The sampled keys sort client-side in key space and the
-    // factor-quantile positions become the parent's checkpoints, parsed
-    // through the SAME key arithmetic as the root bounds; a parent whose
-    // sample fails to parse (characters outside the base-66 alphabet) or
-    // yields no interior checkpoints falls back to the arithmetic mesh —
-    // splits only refine HOW a box is partitioned, never its coverage, so
-    // correctness is untouched either way. Parents batch UNION ALL into one
-    // statement (bounded below) so a level costs ONE extra round-trip on
-    // one engine, not one per parent. Remote cost: a top-n over each
-    // parent's slice — on a PK-indexed/clustered table an index range
-    // scan, and in the regime this exists for (snowflake IDs, tenant
-    // prefixes) it replaces whole LEVELS of checksum statements that
-    // re-scan the same slice while arithmetic splits narrow key WIDTH
-    // toward the dense sliver. Single-column keys only, like
-    // PushdownDiffer's local sampling (compound keys keep the mesh).
-    val quantileActive = control.quantileSeed && keyCols.size == 1
-    val samplesPerBucket = 16
-    // returns (children by parent, sample statements issued) — the
-    // statement count comes back as a value because two calls run on
-    // concurrent futures per level and must not race on the `queries` var
-    def quantileSplitAll(t: RemoteTable, parents: Seq[Box]): (Map[Box, Seq[Box]], Int) =
-      if (!quantileActive || parents.isEmpty) (Map.empty, 0)
-      else {
-        var stmts = 0
-        val k = keyCols.head
-        val p = t.engine.profile
-        val orderBy = p.md5AsHexSql(p.toStringSql(segKeySql(t, k)))
-        val nPer = bisectionFactor * samplesPerBucket
-        // bound each statement's text drain to ~32k short values, and never
-        // exceed the configured per-statement segment cap
-        val perStmt = math.max(1, math.min(maxSegmentsPerQuery, 32768 / nPer))
-        val samples = scala.collection.mutable.Map.empty[Int, ArrayBuffer[String]]
-        parents.zipWithIndex.grouped(perStmt).foreach { chunk =>
-          val sql = chunk.map { case (box, i) =>
-            val w = t.extraWhereSql.fold(pred(t, box))(e => s"(${pred(t, box)}) AND ($e)")
-            s"SELECT $i AS seg, graft_sk FROM (" +
-              p.sampleSql(t.table, Seq(s"${segKeySql(t, k)} AS graft_sk"),
-                nPer, Some(w), Some(orderBy)) + s") g$i"
-          }.mkString(" UNION ALL ")
-          stmts += 1
-          // a failed sample statement must not kill the diff — those
-          // parents just keep the arithmetic split
-          scala.util.Try(t.engine.query(sql)) match {
-            case scala.util.Success(rows) => rows.foreach { r =>
-              for (seg <- r.head; v <- r(1))
-                samples.getOrElseUpdate(seg.trim.toInt, ArrayBuffer.empty[String]) += v
-            }
-            case scala.util.Failure(e) => Console.err.println(
-              s"[graft] quantile sample on ${p.name} failed (${e.getMessage}); " +
-                "falling back to arithmetic splits for this batch")
-          }
-        }
-        val split = parents.zipWithIndex.flatMap { case (box, i) =>
-          samples.get(i).flatMap { raw =>
-            scala.util.Try {
-              val (lo, hi) = (box._1.head, box._2.head)
-              val parsed = raw.toSeq.map(parseKey(k, _))
-              val cpKeys: Seq[KeySpace.Key] =
-                if (hexKeyCols(k)) parsed.map(s => KeySpace.UuidKey(
-                  BigInt(s.asInstanceOf[String], 16), uppercase = true, dashed = false))
-                else TableSegment.toKeys(
-                  Seq(TableSegment.fromKey(lo), TableSegment.fromKey(hi)) ++ parsed).drop(2)
-              val sorted = cpKeys.sortWith((x, y) => (x - y) < 0)
-              val interior = (1 until bisectionFactor)
-                .map(j => sorted((j * sorted.size) / bisectionFactor))
-                .filter(c => (c - lo) > 0 && (hi - c) > 0)
-                .distinct.sortWith((x, y) => (x - y) < 0)
-              if (interior.isEmpty) None
-              else Some(box -> ((lo +: interior) :+ hi).sliding(2)
-                .map(pr => (Seq(pr(0)), Seq(pr(1)))).toSeq)
-            }.toOption.flatten
-          }
-        }.toMap
-        (split, stmts)
-      }
-
-    type Summary = (Long, Option[BigDecimal])
-    def levelQuery(t: RemoteTable, norm: Map[String, String],
-        chunk: Seq[Box], cols: Seq[String]) = scala.concurrent.Future {
-      val sql = t.engine.profile.segmentedChecksumSql(t.table,
-        cols.map(norm), chunk.map(pred(t, _)), t.extraWhereSql)
-      t.engine.query(sql).map { r =>
-        r(0).get.trim.toInt -> ((r(1).get.trim.toLong: Long),
-          r(2).map(s => BigDecimal(s.trim)))
-      }.toMap
-    }
-
-    // leaf compare shared by the end-of-loop path and progressive per-level
-    // emission: both sides' rows download concurrently, one JoinDiffer pass
-    var queries2 = 0
-    var fetchedRows = 0L
-    def toDf(rows: Seq[Seq[Option[String]]], cols: Seq[String]): DataFrame =
-      spark.createDataFrame(rows.map(r => Row(r.map(_.orNull): _*)).asJava,
-        StructType(cols.map(StructField(_, StringType, nullable = true))))
-    def compareLeaves(leafSeq: Seq[Box], cmpCols: Seq[String]): DataFrame = {
-      val rel = keyCols ++ cmpCols
-      // JDBC-reachable engines fetch leaves as ONE partitioned scan — each
-      // leaf predicate is a partition read by executors in parallel, and
-      // the rows never pass through the driver. That is the path that
-      // makes the dense-diff CUTOVER scale here: in that regime the
-      // "leaves" are most of the table, and a single-threaded text drain
-      // into driver-held Seqs would be the new bottleneck (and a driver
-      // OOM) — exactly PushdownDiffer's fetch split. Text-protocol
-      // engines keep the batched-statement drain.
-      def fetchSide(t: RemoteTable,
-          norm: Map[String, String]): scala.concurrent.Future[(DataFrame, Long, Int)] =
-        scala.concurrent.Future {
-          val p = t.engine.profile
-          t.engine.jdbcSource match {
-            case Some((url, props)) =>
-              val rk = keyCols.indices.map(d => s"__graft_rk_$d")
-              val sel = (rel.map(c => s"${norm(c)} AS ${p.quote(c)}") ++
-                keyCols.zip(rk).map { case (k, al) =>
-                  s"${segKeySql(t, k)} AS ${p.quote(al)}" })
-                .mkString(", ")
-              val inner = s"SELECT $sel FROM ${t.table}" +
-                t.extraWhereSql.fold("")(e => s" WHERE $e")
-              def rkPred(box: Box): String =
-                rk.zip(box._1.map(TableSegment.fromKey)).zip(box._2.map(TableSegment.fromKey))
-                  .map { case ((al, lo), hi) =>
-                    s"${p.quote(al)} >= ${p.literal(lo)} AND ${p.quote(al)} < ${p.literal(hi)}"
-                  }.mkString(" AND ")
-              // pin: a task retry must re-read blocks, not the remote —
-              // persist(), which KEEPS the JDBC lineage, so losing an
-              // executor mid-compare recomputes its partitions from the
-              // remote instead of failing the whole diff (localCheckpoint
-              // truncates lineage and cannot recover). The CacheManager
-              // leak persist used to cause is closed in compareLeaves:
-              // the diff result is eagerly checkpointed and BOTH inputs
-              // unpersist in a finally, so no fetch outlives its leaf
-              // comparison.
-              val fetched = spark.read.jdbc(url, s"($inner) g", leafSeq.map(rkPred).toArray, props)
-                .drop(rk: _*)
-                .persist()
-              (fetched, fetched.count(), 1) // one logical scan (N partition reads)
-            case None =>
-              var stmts = 0
-              val rows = leafSeq.grouped(maxSegmentsPerQuery).toSeq.flatMap { chunk =>
-                val leafOr = chunk.map(bx => s"(${pred(t, bx)})").mkString(" OR ")
-                stmts += 1
-                t.engine.query(p.selectNormalizedSql(t.table,
-                  rel.map(c => (norm(c), c)),
-                  Some(t.extraWhereSql.fold(s"($leafOr)")(e => s"($leafOr) AND ($e)"))))
-              }
-              (toDf(rows, rel), rows.size.toLong, stmts)
-          }
-        }
-      val (ffa, ffb) = (fetchSide(a, normA), fetchSide(b, normB))
-      val ((dfA, nA, qA), (dfB, nB, qB)) = (await(ffa), await(ffb))
-      fetchedRows += nA + nB
-      queries2 += qA + qB
-      // materialize the diff NOW (eager localCheckpoint — small: bounded by
-      // the differing neighborhood), then release the fetched inputs: the
-      // persisted JDBC fetches carry recoverable lineage through the join,
-      // and nothing cached outlives the leaf comparison. unpersist on the
-      // driver-built text-path frames is a no-op.
-      try JoinDiffer.diff(dfA, dfB, keyCols, cmpCols).localCheckpoint(true)
-      finally { dfA.unpersist(); dfB.unpersist() }
-    }
-
-    val leaves = ArrayBuffer.empty[Box]
-    val emitted = ArrayBuffer.empty[DataFrame]
-    // level-0 seed: the root splits at the larger side's sampled quantiles
-    // (one COUNT per side picks the sampling engine — concurrent with each
-    // other, so the wall cost is one round-trip, the same budget
-    // PushdownDiffer's local count() pays; columnar warehouses answer
-    // COUNT(*) from metadata). A failed COUNT must not kill the diff any
-    // more than a failed sample statement does: the surviving side (or
-    // side a) is sampled, and the sampler's own fallback keeps the
-    // arithmetic split as the floor.
-    var frontier: Seq[Box] =
-      if (quantileActive) {
-        def cnt(t: RemoteTable) = scala.concurrent.Future {
-          scala.util.Try(
-            t.engine.query(s"SELECT COUNT(*) AS cnt FROM ${t.table}" +
-              t.extraWhereSql.fold("")(e => s" WHERE $e")).head.head.get.trim.toLong)
-        }
-        val (fa, fb) = (cnt(a), cnt(b))
-        val (na, nb) = (await(fa), await(fb))
-        queries += 2
-        val larger = (na.toOption, nb.toOption) match {
-          case (Some(x), Some(y)) => if (x >= y) a else b
-          case (Some(_), None) => a
-          case (None, _) => b
-        }
-        val (byQ, stmts) = quantileSplitAll(larger, Seq(rootBox))
-        queries += stmts
-        byQ.getOrElse(rootBox, splitBox(rootBox))
-      } else splitBox(rootBox)
-    var level = 0
-    var probed = 0
-    var pruned = 0
-    var cutoverAt: Option[Int] = None
-    val levelMillis = ArrayBuffer.empty[Long]
-    while (frontier.nonEmpty) {
-      require(level < 64, s"bisection did not converge after 64 levels")
-      val levelStart = System.nanoTime()
-      val prunedAtStart = pruned
-      val leavesAtStart = leaves.size
-      val levelSegments = frontier.size
-      probed += levelSegments
-      val activeCompare = compare.filterNot(control.ignored)
-      val activeRelevant = keyCols ++ activeCompare
-      val next = ArrayBuffer.empty[Box]
-      val splitParents = ArrayBuffer.empty[Box]
-      // parents needing a split this level, with their larger side's row
-      // count and WHICH side is larger — collected across chunks so the
-      // quantile path samples each engine's parents in one batch
-      val splitCands = ArrayBuffer.empty[(Box, Long, Boolean)]
-      // upper bound on rows in the next frontier (see PushdownDiffer)
-      var nextFrontierRows = 0L
-      frontier.grouped(maxSegmentsPerQuery).foreach { chunk =>
-        val (fa, fb) = (levelQuery(a, normA, chunk, activeRelevant),
-          levelQuery(b, normB, chunk, activeRelevant))
-        val (ma, mb) = (await(fa), await(fb))
-        queries += 2
-        chunk.zipWithIndex.foreach { case (box, i) =>
-          val sa = ma.getOrElse(i, (0L, None: Option[BigDecimal]))
-          val sb = mb.getOrElse(i, (0L, None: Option[BigDecimal]))
-          if (sa == sb) pruned += 1
-          else if (math.max(sa._1, sb._1) < bisectionThreshold) leaves += box
-          else splitCands += ((box, math.max(sa._1, sb._1), sa._1 >= sb._1))
-        }
-      }
-      // each dirty parent samples on its own larger side (the side whose
-      // rows the split must balance); two batched statements max, run
-      // concurrently — a level still costs max(a, b)
-      val byQuantile: Map[Box, Seq[Box]] = if (quantileActive && splitCands.nonEmpty) {
-        val (fa, fb) = (
-          scala.concurrent.Future(quantileSplitAll(a,
-            splitCands.collect { case (bx, _, true) => bx }.toSeq)),
-          scala.concurrent.Future(quantileSplitAll(b,
-            splitCands.collect { case (bx, _, false) => bx }.toSeq)))
-        val ((qa, sa2), (qb, sb2)) = (await(fa), await(fb))
-        queries += sa2 + sb2
-        qa ++ qb
-      } else Map.empty
-      splitCands.foreach { case (box, rows, _) =>
-        val children = byQuantile.getOrElse(box, splitBox(box))
-        if (children.size <= 1) leaves += box
-        else {
-          next ++= children; splitParents += box
-          nextFrontierRows += rows
-        }
-      }
-      frontier = next.toSeq
-      // dense-diff cutover, same regime call as PushdownDiffer (see
-      // PushdownControl.denseCutover): when sustained levels prune ~nothing
-      // (or the frontier is provably tiny), both remotes are paying
-      // checksum statements that cannot prune — stop bisecting and
-      // bulk-fetch the remainder from both sides. Both sides here are
-      // text-protocol, so the PARENT boxes become the leaves: same rows,
-      // factor× fewer predicates per bulk statement.
-      if (frontier.nonEmpty && control.denseCutover(level + 1, probed, pruned,
-          nextFrontierRows, bisectionThreshold)) {
-        // Candidate cutover — confirm density first unless the frontier is
-        // already small enough to fetch outright: checksum the children of
-        // a strided sample of split parents on BOTH engines (one batch
-        // each, concurrent). Scattered diffs prune most sampled children
-        // clean and veto the cutover (see PushdownControl.denseCutover).
-        val smallFrontier = nextFrontierRows <=
-          control.denseCutoverFrontierFactor.toLong * bisectionThreshold
-        val confirmed = smallFrontier || {
-          val maxParents = math.max(1, maxSegmentsPerQuery / bisectionFactor)
-          val stride = math.max(1, splitParents.size / maxParents)
-          val sample = splitParents.indices
-            .collect { case i if i % stride == 0 => splitParents(i) }
-            .take(maxParents)
-          // compound keys can fan out up to 2^dims children per parent, so
-          // the sample's children can exceed one statement's cap — batch
-          // the confirm query like every other checksum round
-          val children = sample.flatMap(splitBox)
-          var clean = 0
-          children.grouped(maxSegmentsPerQuery).foreach { cchunk =>
-            val (fa, fb) = (levelQuery(a, normA, cchunk, activeRelevant),
-              levelQuery(b, normB, cchunk, activeRelevant))
-            val (ma, mb) = (await(fa), await(fb))
-            queries += 2
-            clean += cchunk.indices.count(i =>
-              ma.getOrElse(i, (0L, None: Option[BigDecimal])) ==
-                mb.getOrElse(i, (0L, None: Option[BigDecimal])))
-          }
-          clean.toDouble / children.size < control.denseCutoverPruneRate
-        }
-        if (confirmed) {
-          cutoverAt = Some(level)
-          leaves ++= splitParents
-          frontier = Seq.empty
-        }
-      }
-      levelMillis += (System.nanoTime() - levelStart) / 1000000
-      control.onLevel(PushdownLevel(level, levelSegments, pruned - prunedAtStart, levelMillis.last))
-      // progressive: leaves found this level are downloaded and compared NOW
-      // (both engines concurrently) — first diff rows surface while deeper
-      // levels are still bisecting, same contract as PushdownDiffer
-      if (control.progressive && leaves.size > leavesAtStart) {
-        val df = compareLeaves(leaves.slice(leavesAtStart, leaves.size).toSeq, activeCompare)
-        emitted += df
-        control.onLeafDiff(level, df)
-      }
-      level += 1
-    }
-
-    val finalCompare = compare.filterNot(control.ignored)
-    val finalRelevant = keyCols ++ finalCompare
-    val dropped = compare.filterNot(finalCompare.contains)
-
-    if (control.progressive) {
-      val stats = PushdownStats(level, probed, pruned, leaves.size, queries + queries2,
-        fetchedRows, levelMillis.toSeq, dropped, cutoverAt)
-      if (emitted.isEmpty)
-        return (spark.createDataFrame(Seq.empty[Row].asJava, outSchema(finalRelevant)), stats)
-      val out = emitted.map(df => df.select(
-        ("sign" +: finalRelevant).map(org.apache.spark.sql.functions.col): _*)).reduce(_ union _)
-      return (out, stats)
-    }
-
-    if (leaves.isEmpty)
-      return (spark.createDataFrame(Seq.empty[Row].asJava, outSchema(finalRelevant)),
-        PushdownStats(level, probed, pruned, 0, queries, 0, levelMillis.toSeq, dropped, cutoverAt))
-    val out = compareLeaves(leaves.toSeq, finalCompare)
-    (out, PushdownStats(level, probed, pruned, leaves.size, queries + queries2,
-      fetchedRows, levelMillis.toSeq, dropped, cutoverAt))
-  }
+      control: PushdownControl = new PushdownControl()): (DataFrame, PushdownStats) =
+    Bisection.diff(RemoteSide(spark, a), RemoteSide(spark, b),
+      bisectionFactor, bisectionThreshold, control)
 }
