@@ -2,6 +2,7 @@ package graft.layout
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Multi-dimensional data layout: Z-order (Morton) clustered writes, a
   * VERSIONED min/max file manifest, manifest-pruned scans, incremental
@@ -155,13 +156,11 @@ object DataLayout {
     * reports the affected stats as unknown instead of silently
     * undercounting.
     *
-    * Served DRIVER-SIDE when the log is small ([[LogLocal]]): the rows
-    * come back as a LocalRelation, so every metadata probe downstream
-    * (version derivation, alive-set filters, envelope pruning) constant-
-    * folds on the driver instead of costing a Spark job each — the
-    * measured dominant fixed cost of the layout surface (guide §1/§5:
-    * metadata belongs on the driver, only data gets jobs). Falls back to
-    * the distributed mergeSchema read past the size guard. */
+    * This is the RAW log, for the consumers that need per-commit rows
+    * (history, txn markers, a writer's schema template); per-file
+    * metadata answers come from the replay, [[manifestFold]]. Served as a
+    * LocalRelation when the log is under [[LogLocal]]'s size cap, by the
+    * distributed mergeSchema read past it. */
   def manifestLog(spark: SparkSession, dir: String): DataFrame =
     manifestRowsLocal(spark, dir) match {
       case Some((schema, rows)) =>
@@ -172,71 +171,148 @@ object DataLayout {
     }
 
   /** Driver-side manifest rows (None = missing dir, oversized log, or a
-    * parquet shape [[LogLocal]] declines — callers fall back). */
-  private def manifestRowsLocal(spark: SparkSession,
-      dir: String): Option[(org.apache.spark.sql.types.StructType,
-        Vector[org.apache.spark.sql.Row])] =
-    LogLocal.read(spark, manifestPath(dir))
+    * parquet shape [[LogLocal]] declines). Read only by the replay
+    * ([[manifestFold]]), the raw-log readers ([[manifestLog]],
+    * [[lastCommittedTxn]]) and vacuum's snapshot. */
+  private def manifestRowsLocal(spark: SparkSession, dir: String,
+      snapshot: Option[Seq[String]] = None)
+      : Option[(StructType, Vector[org.apache.spark.sql.Row])] =
+    LogLocal.read(spark, manifestPath(dir), snapshot)
 
-  /** A metadata frame pinned for multiple consistent consumptions: a
-    * LocalRelation (the driver-side log path) is already materialized —
-    * checkpointing it would only spend a Spark job; anything else keeps
-    * the eager localCheckpoint. */
-  private def pinned(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ => df.localCheckpoint(true)
+  // ---- manifest replay ----------------------------------------------------
+
+  /** One manifest `file` after replaying the log: the null-safe max of
+    * every log column over the file's rows. A file's added row, its
+    * tombstone twin and any vacuum-lingering duplicate carry identical
+    * stats, so the max collapses them and `added`/`removed` are its
+    * lifetime. Sentinel rows (`_graft_*`: version and horizon markers, txn
+    * ledgers, schema-only versions) and tombstone-only files are entries
+    * too. `fingerprint` is the (content_fp, n_rows) pair of a real file
+    * that recorded both. `row` is the folded row in the fold's schema. */
+  private[layout] final case class FileEntry(file: String,
+      added: Option[Long], removed: Option[Long],
+      fingerprint: Option[(BigDecimal, Long)], row: org.apache.spark.sql.Row) {
+    /** Added at or before `v` and not tombstoned at or before it. */
+    def aliveAt(v: Long): Boolean = added.exists(_ <= v) && removed.forall(_ > v)
+    def sentinel: Boolean = file.startsWith("_graft_")
+  }
+
+  /** The manifest log replayed per file — every layout metadata answer
+    * (version, horizon, alive set, lifetimes, fingerprints) derives from
+    * it. `schema` is the `groupBy("file")`/`max` shape: `file`, the stats
+    * columns, then `v_added`, `v_removed`. */
+  private[layout] final case class ManifestFold(schema: StructType,
+      entries: Vector[FileEntry]) {
+    /** Highest version any log row records; −1 for an empty log. */
+    def maxVersion: Long = entries.iterator
+      .map(e => math.max(e.added.getOrElse(-1L), e.removed.getOrElse(-1L)))
+      .foldLeft(-1L)(math.max)
+
+    /** The vacuum horizon marker: the lowest time-travelable version, 0
+      * when never vacuumed with retention. */
+    def horizon: Long =
+      entries.find(_.file == VersionHorizonFile).flatMap(_.added).getOrElse(0L)
+
+    /** Files alive at `version`. An explicit version below the vacuum
+      * horizon refuses loudly — its files were physically removed, and a
+      * silently partial table is the one thing a versioned read must never
+      * return. Latest and negative versions (the synthetic "before
+      * anything" state, empty by construction) skip the check. */
+    def aliveAt(dir: String, version: Long): Vector[FileEntry] = {
+      val h = horizon
+      require(version == Latest || version < 0 || version >= h,
+        s"version $version of $dir predates the vacuum horizon $h — its " +
+          "files were physically removed; time travel reaches versions >= " +
+          s"$h. Vacuum with a larger retainVersions to keep more history.")
+      entries.filter(_.aliveAt(version))
     }
 
-  /** Row count of a driver-local (LocalRelation) frame without spending a
-    * Spark job; None when the frame is distributed (caller counts). */
-  private def localRowCount(df: DataFrame): Option[Long] =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(lr.data.length.toLong)
-      case _ => None
+    /** `es` as a LocalRelation frame (jobless to project and collect). */
+    def frame(spark: SparkSession, es: Seq[FileEntry]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(es.map(_.row): _*), schema)
+
+    /** Accessor for a long stats column of an entry (None when null or
+      * not in the log). */
+    def longCol(name: String): FileEntry => Option[Long] = {
+      val i = schema.fieldNames.indexOf(name)
+      e => if (i < 0 || e.row.isNullAt(i)) None else Some(e.row.getLong(i))
+    }
+  }
+
+  /** Replay raw manifest `rows` per file, on the driver (Spark `max`
+    * semantics via [[LogLocal.maxVal]]). Idempotent: rows already grouped
+    * by file pass through unchanged, which is how the distributed replay
+    * lands in the same shape. */
+  private def foldManifest(schema: StructType,
+      rows: Seq[org.apache.spark.sql.Row]): ManifestFold = {
+    val names = schema.fieldNames
+    val iFile = names.indexOf("file")
+    val lifetime = Seq("v_added", "v_removed").map(names.indexOf(_))
+    if (iFile < 0 || lifetime.contains(-1))
+      return ManifestFold(new StructType().add("file", "string")
+        .add("v_added", "long").add("v_removed", "long"), Vector.empty)
+    val cols = (names.indices.filterNot(i => i == iFile || lifetime.contains(i)) ++
+      lifetime).toArray
+    val acc = scala.collection.mutable.LinkedHashMap.empty[String, Array[Any]]
+    for (r <- rows if !r.isNullAt(iFile)) {
+      val a = acc.getOrElseUpdate(r.getString(iFile), new Array[Any](cols.length))
+      var i = 0
+      while (i < cols.length) { a(i) = LogLocal.maxVal(a(i), r.get(cols(i))); i += 1 }
+    }
+    val out = StructType(schema.fields(iFile) +: cols.map(schema.fields(_)).toSeq)
+    val on = out.fieldNames
+    val Seq(iA, iR, iFp, iN) =
+      Seq("v_added", "v_removed", "content_fp", "n_rows").map(on.indexOf(_))
+    def long(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (i < 0 || r.isNullAt(i)) None else Some(r.getLong(i))
+    ManifestFold(out, acc.iterator.map { case (f, a) =>
+      val row = org.apache.spark.sql.Row.fromSeq(f +: a.toSeq)
+      val fp =
+        if (f.startsWith("_graft_") || iFp < 0 || row.isNullAt(iFp)) None
+        else long(row, iN).map(n => (BigDecimal(row.getDecimal(iFp)), n))
+      FileEntry(f, long(row, iA), long(row, iR), fp, row)
+    }.toVector)
+  }
+
+  /** THE manifest replay, and the one place that chooses between the
+    * driver-side decode and a Spark read: below [[LogLocal]]'s size cap
+    * the log's rows fold on the driver (zero jobs); past it the same
+    * per-file max runs as one Spark `groupBy` whose O(files) result is
+    * collected. Every derivation downstream is shared. */
+  private[layout] def manifestFold(spark: SparkSession, dir: String): ManifestFold =
+    manifestRowsLocal(spark, dir) match {
+      case Some((schema, rows)) => foldManifest(schema, rows)
+      case None =>
+        val log = spark.read.option("mergeSchema", "true").parquet(manifestPath(dir))
+        val aggs = log.columns.toSeq.filterNot(_ == "file").map(c => max(col(c)).as(c))
+        val g = log.groupBy("file").agg(aggs.head, aggs.tail: _*)
+        foldManifest(g.schema, g.collect().toSeq)
     }
 
-  /** Highest version number recorded across the manifest log AND the
+  /** Highest version recorded across the manifest log AND the
     * deletion-vector log (a DV commit is a version like any other — time
     * travel to just before it must un-hide its rows). −1 for a missing
     * layout. */
   def currentVersion(spark: SparkSession, dir: String): Long = {
-    val fs = fsOf(spark, dir)
     val m =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(manifestPath(dir)))) -1L
-      else manifestRowsLocal(spark, dir) match {
-        case Some((schema, rows)) =>
-          val iA = schema.fieldNames.indexOf("v_added")
-          val iR = schema.fieldNames.indexOf("v_removed")
-          if (rows.isEmpty || iA < 0 || iR < 0) -1L
-          else rows.iterator.map { r =>
-            math.max(if (r.isNullAt(iA)) -1L else r.getLong(iA),
-              if (r.isNullAt(iR)) -1L else r.getLong(iR))
-          }.max
-        case None => manifestLog(spark, dir)
-          .agg(max(greatest(coalesce(col("v_added"), lit(-1L)),
-            coalesce(col("v_removed"), lit(-1L)))))
-          .head().getLong(0)
-      }
+      if (!fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(manifestPath(dir)))) -1L
+      else manifestFold(spark, dir).maxVersion
     math.max(m, dvMaxVersion(spark, dir))
   }
 
-  /** Max version in the DV log, −1 when empty/missing. Answered from the
-    * commit FILE NAMES driver-side when possible: every DV commit lands as
-    * `commit-v{v}.parquet` ([[commitLogFile]]), and a vacuum-compacted
-    * base (`vacuum-*.parquet`) only ever carries versions at or below the
-    * manifest's high-water-mark marker, which [[currentVersion]]'s
-    * manifest leg already covers. Any unrecognized name falls back to the
-    * distributed agg. */
-  private def dvMaxVersion(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dvPath(dir))
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) return -1L
-    val names = fs.listStatus(p).toSeq.filter(s => s.isFile &&
-        s.getPath.getName.endsWith(".parquet") &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
+  /** Max version in the DV log (−1 when empty/missing), answered from the
+    * commit FILE NAMES: every DV commit lands as `commit-v{v}.parquet`
+    * ([[commitLogFile]]), and a vacuum-compacted base (`vacuum-*.parquet`)
+    * only ever carries versions at or below the manifest's high-water-mark
+    * marker, which the manifest leg of every caller covers. Any other name
+    * (a clone's copied log) replays the DV log instead. `snapshot` = a
+    * caller-held file list (vacuum's) instead of a listing. */
+  private def dvMaxVersion(spark: SparkSession, dir: String,
+      snapshot: Option[Seq[String]] = None): Long = {
+    val names = snapshot.getOrElse(
+      LogLocal.logFiles(fsOf(spark, dir), new org.apache.hadoop.fs.Path(dvPath(dir)))
+        .getOrElse(Nil).map(_.getPath.toString))
+      .map(new org.apache.hadoop.fs.Path(_).getName)
     val parsed: Seq[Option[Long]] = names.map {
       case n if n.startsWith("commit-v") =>
         n.stripPrefix("commit-v").stripSuffix(".parquet").toLongOption
@@ -244,81 +320,18 @@ object DataLayout {
       case _ => None
     }
     if (parsed.forall(_.isDefined)) (-1L +: parsed.flatten).max
-    else dvLog(spark, dir)
-      .map(_.agg(max("v")).head())
-      .filterNot(_.isNullAt(0)).map(_.getLong(0))
-      .getOrElse(-1L)
+    else dvFold(spark, dir, snapshot).maxVersion
   }
 
   /** One stats row per file ALIVE at `version`: added at or before it,
-    * not tombstoned at or before it. O(files) work on stats rows.
-    * An explicit version below the vacuum horizon refuses loudly — its
-    * files were physically removed, and a silently partial table is the
-    * one thing a versioned read must never return. (Latest reads skip the
-    * check: the current version is always above the horizon.) */
+    * not tombstoned at or before it — a LocalRelation over the replayed
+    * manifest, so projecting and collecting it costs no Spark job. An
+    * explicit version below the vacuum horizon refuses loudly
+    * ([[ManifestFold.aliveAt]]). */
   def aliveManifest(spark: SparkSession, dir: String,
       version: Long = Latest): DataFrame = {
-    // negative versions are the synthetic "before anything" state (the
-    // change-feed stream diffs -1 → 0 for its initial snapshot): their
-    // alive set is empty by construction, never vacuum-damaged
-    if (version != Latest && version >= 0) {
-      val h = vacuumHorizon(spark, dir)
-      require(version >= h,
-        s"version $version of $dir predates the vacuum horizon $h — its " +
-          "files were physically removed; time travel reaches versions >= " +
-          s"$h. Vacuum with a larger retainVersions to keep more history.")
-    }
-    manifestRowsLocal(spark, dir).filter { case (schema, _) =>
-      Seq("file", "v_added", "v_removed").forall(schema.fieldNames.contains)
-    } match {
-      case Some((schema, rows)) =>
-        // the distributed shape below, computed driver-side: group by
-        // file, per-column max (Spark max semantics — nulls ignored,
-        // orderings identical), then the alive-at-version filter. Output
-        // column order matches the groupBy/agg result: file, stats, then
-        // v_added/v_removed.
-        val names = schema.fieldNames
-        val iFile = names.indexOf("file")
-        val iA = names.indexOf("v_added")
-        val iR = names.indexOf("v_removed")
-        val statIdx = names.indices.filterNot(i =>
-          i == iFile || i == iA || i == iR)
-        val outIdx = (statIdx :+ iA :+ iR).toArray
-        val byFile = scala.collection.mutable.LinkedHashMap
-          .empty[String, Array[Any]]
-        for (r <- rows) {
-          val acc = byFile.getOrElseUpdate(r.getString(iFile),
-            new Array[Any](names.length))
-          var i = 0
-          while (i < outIdx.length) {
-            val c = outIdx(i)
-            acc(c) = LogLocal.maxVal(acc(c), if (r.isNullAt(c)) null else r.get(c))
-            i += 1
-          }
-        }
-        val outSchema = org.apache.spark.sql.types.StructType(
-          (statIdx.map(i => schema.fields(i)) :+
-            schema.fields(iA) :+ schema.fields(iR))
-            .foldLeft(new org.apache.spark.sql.types.StructType()
-              .add(schema.fields(iFile)))(_ add _))
-        val alive = byFile.iterator.collect {
-          case (f, acc)
-            if acc(iA) != null && acc(iA).asInstanceOf[Long] <= version &&
-              (acc(iR) == null || acc(iR).asInstanceOf[Long] > version) =>
-            org.apache.spark.sql.Row.fromSeq(
-              f +: outIdx.toSeq.map(acc(_)))
-        }.toSeq
-        spark.createDataFrame(java.util.Arrays.asList(alive: _*), outSchema)
-      case None =>
-        val log = manifestLog(spark, dir)
-        val statCols = log.columns.filterNot(Set("file", "v_added", "v_removed"))
-        val aggs = statCols.map(c => max(col(c)).as(c)) ++
-          Seq(max(col("v_added")).as("v_added"), max(col("v_removed")).as("v_removed"))
-        log.groupBy("file")
-          .agg(aggs.head, aggs.tail: _*)
-          .where(col("v_added").isNotNull && col("v_added") <= version &&
-            (col("v_removed").isNull || col("v_removed") > version))
-    }
+    val m = manifestFold(spark, dir)
+    m.frame(spark, m.aliveAt(dir, version))
   }
 
   /** Canonical column order for log writes, so parquet appends across
@@ -357,32 +370,9 @@ object DataLayout {
     * The rename-into-place protocol below is identical either way. */
   private[layout] def commitLogFile(logDir: String, rows: DataFrame, v: Long,
       smallMeta: Boolean = false): Unit = {
-    val spark = rows.sparkSession
     val lp = new org.apache.hadoop.fs.Path(logDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(logDir,
-      s"_stage_${java.util.UUID.randomUUID}")
-    val localPart: Option[org.apache.hadoop.fs.Path] =
-      if (!smallMeta) None
-      else {
-        val p = new org.apache.hadoop.fs.Path(logDir,
-          s"_stage_${java.util.UUID.randomUUID.toString.take(12)}.parquet")
-        // collect is jobless for LocalRelation rows (vacuum bases), one
-        // tiny agg job for stats frames — the rows are O(files) either way
-        if (LogLocal.writeLocal(spark, rows.schema, rows.collect().toSeq, p))
-          Some(p)
-        else None
-      }
-    val part = localPart.getOrElse {
-      rows.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      fs.listStatus(stage).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse {
-          fs.delete(stage, true)
-          throw new IllegalStateException(
-            s"staged commit wrote no part file under $stage")
-        }
-    }
+    val fs = lp.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    val (part, residue) = stageLogFile(logDir, rows, smallMeta)
     val dest = new org.apache.hadoop.fs.Path(logDir, s"commit-v$v.parquet")
     // IN-PROCESS serialization of the put-if-absent: Hadoop's LOCAL rename
     // is check-then-rename (a TOCTOU — two simultaneous renames can both
@@ -400,9 +390,8 @@ object DataLayout {
         try fs.rename(part, dest)
         catch { case _: java.io.IOException => false }
     }
-    fs.delete(stage, true)
+    fs.delete(residue, true) // a lost race also drops the staged file here
     if (!ok) {
-      localPart.foreach(fs.delete(_, false)) // lost race: drop the staged file
       throw new java.util.ConcurrentModificationException(
         s"version $v of ${lp.getParent} was committed by a concurrent writer " +
           "while this mutation ran — re-read the layout and retry")
@@ -411,6 +400,37 @@ object DataLayout {
 
   /** JVM-wide lock for [[commitLogFile]]'s put-if-absent window. */
   private val commitRenameLock = new Object
+
+  /** The stage step every log write shares: `rows` as ONE parquet file
+    * under `logDir`, invisible to log readers until renamed into place.
+    * `smallMeta` rows go through [[LogLocal.writeLocal]] as a driver-side
+    * `_stage_<12 hex>.parquet`; the rest (or a type the local writer does
+    * not handle) through a Spark `coalesce(1)` write into a `_stage_<uuid>`
+    * dir. Returns the part file and the residue to delete after the
+    * rename: the stage dir, or the staged file itself (gone once renamed). */
+  private def stageLogFile(logDir: String, rows: DataFrame,
+      smallMeta: Boolean): (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
+    val spark = rows.sparkSession
+    if (smallMeta) {
+      val p = new org.apache.hadoop.fs.Path(logDir,
+        s"_stage_${java.util.UUID.randomUUID.toString.take(12)}.parquet")
+      // collect is jobless for LocalRelation rows (vacuum bases), one tiny
+      // agg job for stats frames — the rows are O(files) either way
+      if (LogLocal.writeLocal(spark, rows.schema, rows.collect().toSeq, p))
+        return (p, p)
+    }
+    val stage = new org.apache.hadoop.fs.Path(logDir,
+      s"_stage_${java.util.UUID.randomUUID}")
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rows.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = fs.listStatus(stage).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse {
+        fs.delete(stage, true)
+        throw new IllegalStateException(s"staged log write left no part file under $stage")
+      }
+    (part, stage)
+  }
 
   private def appendLog(dir: String, rows: DataFrame, v: Long): Unit =
     commitLogFile(manifestPath(dir), normalizeLog(rows), v, smallMeta = true)
@@ -423,33 +443,12 @@ object DataLayout {
     * DV bases are coordinate-sized and keep the Spark write). */
   private def writeCompactedLog(spark: SparkSession, logDir: String,
       rows: DataFrame, smallMeta: Boolean = false): Unit = {
-    val lp = new org.apache.hadoop.fs.Path(logDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(logDir,
-      s"_stage_${java.util.UUID.randomUUID}")
-    val localPart: Option[org.apache.hadoop.fs.Path] =
-      if (!smallMeta) None
-      else {
-        val p = new org.apache.hadoop.fs.Path(logDir,
-          s"_stage_${java.util.UUID.randomUUID.toString.take(12)}.parquet")
-        if (LogLocal.writeLocal(spark, rows.schema, rows.collect().toSeq, p))
-          Some(p)
-        else None
-      }
-    val part = localPart.getOrElse {
-      rows.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      fs.listStatus(stage).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse {
-          fs.delete(stage, true)
-          throw new IllegalStateException(
-            s"compacted log base wrote no part file under $stage")
-        }
-    }
+    val fs = fsOf(spark, logDir)
+    val (part, residue) = stageLogFile(logDir, rows, smallMeta)
     val dest = new org.apache.hadoop.fs.Path(logDir,
       s"vacuum-${java.util.UUID.randomUUID.toString.take(12)}.parquet")
     require(fs.rename(part, dest), s"log compaction rename failed: $part -> $dest")
-    fs.delete(stage, true)
+    fs.delete(residue, true)
   }
 
   /** OCC AUTO-RETRY for append commits: an append's log entry is disjoint
@@ -531,10 +530,8 @@ object DataLayout {
               s"rewrite of $dir lost its race to a winner that retired " +
                 s"${gone.size} of the same files — re-read and re-run")
           val retiredCanon = retired.map(canon).toSet
-          val dvTouched = dvLog(spark, dir).exists(
-            _.where(col("v") > snapshotV)
-              .select(canonCol(col("file")).as("f")).distinct()
-              .collect().exists(r => retiredCanon(r.getString(0))))
+          val dvTouched = dvFold(spark, dir).entries
+            .exists(e => e.v > snapshotV && retiredCanon(e.file))
           if (dvTouched)
             throw new java.util.ConcurrentModificationException(
               s"rewrite of $dir lost its race to a deletion-vector commit " +
@@ -1204,9 +1201,10 @@ object DataLayout {
     // dup-safe by construction and read this frame RAW — no dedupe
     // exchange on the hot path; the few EXACT-COUNT consumers go through
     // [[dvLogDeduped]] instead.
-    else Some(spark.read.schema("file STRING, pos BIGINT, v BIGINT")
-      .parquet(dvPath(dir)))
+    else Some(spark.read.schema(DvSchema).parquet(dvPath(dir)))
   }
+
+  private final val DvSchema = "file STRING, pos BIGINT, v BIGINT"
 
   /** [[dvLog]] with lingering exact duplicates collapsed — for the few
     * EXACT-COUNT consumers (tableStats' row subtraction, history, the
@@ -1220,13 +1218,11 @@ object DataLayout {
       version: Long): Option[DataFrame] =
     dvLog(spark, dir).map(_.where(col("v") <= version))
 
-  /** Driver-side DV rows as (canonical file, pos, v) — size-guarded like
-    * every [[LogLocal]] read (the DV log is churn-sized, not table-sized,
-    * but past the guard the distributed probes take over). None = log
-    * missing/oversized/undecodable. */
-  private def dvRowsLocal(spark: SparkSession,
-      dir: String): Option[Vector[(String, Long, Long)]] =
-    LogLocal.read(spark, dvPath(dir))
+  /** Driver-side DV rows as (canonical file, pos, v); None = log
+    * missing/oversized/undecodable. Read only by [[dvFold]]. */
+  private def dvRowsLocal(spark: SparkSession, dir: String,
+      snapshot: Option[Seq[String]]): Option[Vector[(String, Long, Long)]] =
+    LogLocal.read(spark, dvPath(dir), snapshot)
       .filter { case (s, _) =>
         Seq("file", "pos", "v").forall(s.fieldNames.contains) }
       .map { case (s, rows) =>
@@ -1236,40 +1232,42 @@ object DataLayout {
         rows.map(r => (canon(r.getString(iF)), r.getLong(iP), r.getLong(iV)))
       }
 
-  /** Distinct canonical DV'd file names effective at `version`,
-    * driver-side; None = fall back to the distributed distinct. */
-  private def dvCanonLocal(spark: SparkSession, dir: String,
-      version: Long): Option[Set[String]] =
-    dvRowsLocal(spark, dir).map(
-      _.iterator.collect { case (f, _, v) if v <= version => f }.toSet)
+  /** One (canonical file, version) of the DV log: `positions` distinct
+    * row positions of the file were masked at `v`. */
+  private[layout] final case class DvEntry(file: String, v: Long, positions: Long)
 
-  /** DEDUPED per-canonical-file DV position counts, driver-side (the
-    * exact-count twin of [[dvLogDeduped]]'s groupBy for metadata
-    * consumers); None = missing log or size-guard fallback. */
-  private[layout] def dvFileCountsLocal(spark: SparkSession,
-      dir: String): Option[Map[String, Long]] =
-    dvRowsLocal(spark, dir).map(
-      _.distinct.groupBy(_._1).map { case (f, g) => f -> g.size.toLong })
+  /** The DV log replayed per (canonical file, version). Lingering vacuum
+    * duplicates collapse, so every count here is exact. */
+  private[layout] final case class DvFold(entries: Vector[DvEntry]) {
+    /** Highest DV version; −1 when none. */
+    def maxVersion: Long = entries.iterator.map(_.v).foldLeft(-1L)(math.max)
+    /** Canonical files carrying DV positions at `version`. */
+    def filesAt(version: Long): Set[String] =
+      entries.iterator.collect { case e if e.v <= version => e.file }.toSet
+    /** Distinct masked positions on the canonical files `keep` selects. */
+    def positions(keep: String => Boolean): Long =
+      entries.iterator.filter(e => keep(e.file)).map(_.positions).sum
+  }
 
-  /** Per-file max v_removed over NON-SENTINEL manifest rows, driver-side
-    * (reclaimable-file probes); None past the local-log guard. Files
-    * never tombstoned are absent. */
-  private[layout] def fileMaxRemovedLocal(spark: SparkSession,
-      dir: String): Option[Map[String, Long]] =
-    manifestRowsLocal(spark, dir).filter { case (s, _) =>
-      Seq("file", "v_removed").forall(s.fieldNames.contains)
-    }.map { case (s, rows) =>
-      val iF = s.fieldNames.indexOf("file")
-      val iR = s.fieldNames.indexOf("v_removed")
-      val m = scala.collection.mutable.Map.empty[String, Long]
-      for (r <- rows if !r.isNullAt(iF) && !r.isNullAt(iR)) {
-        val f = r.getString(iF)
-        if (!f.startsWith("_graft_")) {
-          val v = r.getLong(iR)
-          if (m.getOrElse(f, Long.MinValue) < v) m(f) = v
-        }
-      }
-      m.toMap
+  /** THE DV replay, chosen like [[manifestFold]]: driver rows below the
+    * size cap, one Spark `groupBy` collected past it. `snapshot` = a
+    * caller-held file list (vacuum's) instead of a listing. Empty when no
+    * DV was ever written. */
+  private[layout] def dvFold(spark: SparkSession, dir: String,
+      snapshot: Option[Seq[String]] = None): DvFold =
+    if (snapshot.exists(_.isEmpty) ||
+        !fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(dvPath(dir))))
+      DvFold(Vector.empty)
+    else dvRowsLocal(spark, dir, snapshot) match {
+      case Some(rows) => DvFold(rows.groupBy(t => (t._1, t._3)).iterator
+        .map { case ((f, v), g) => DvEntry(f, v, g.map(_._2).distinct.size.toLong) }
+        .toVector)
+      case None =>
+        val d = spark.read.schema(DvSchema)
+          .parquet(snapshot.getOrElse(Seq(dvPath(dir))): _*)
+        DvFold(d.groupBy(canonCol(col("file")), col("v"))
+          .agg(count_distinct(col("pos"))).collect()
+          .map(r => DvEntry(r.getString(0), r.getLong(1), r.getLong(2))).toVector)
     }
 
   /** Whether any DV position at `version` addresses a file ALIVE at that
@@ -1279,24 +1277,11 @@ object DataLayout {
     * that keys "needs masking" on mere log presence takes the slow
     * row-at-a-time path forever. O(files) driver work. */
   def dvEffectiveAt(spark: SparkSession, dir: String,
-      version: Long = Latest): Boolean =
-    dvAt(spark, dir, version) match {
-      case None => false
-      case Some(d) =>
-        dvCanonLocal(spark, dir, version) match {
-          case Some(names) if names.isEmpty => false
-          case Some(names) =>
-            // jobless on the local-manifest path: names × alive names
-            aliveManifest(spark, dir, version).select("file")
-              .collect().exists(r => names(canon(r.getString(0))))
-          case None =>
-            val alive = aliveManifest(spark, dir, version)
-              .select(canonCol(col("file")).as("_f")).distinct()
-            d.select(canonCol(col("file")).as("_df")).distinct()
-              .join(alive, col("_df") === col("_f"), "left_semi")
-              .head(1).nonEmpty
-        }
-    }
+      version: Long = Latest): Boolean = {
+    val dvd = dvFold(spark, dir).filesAt(version)
+    dvd.nonEmpty &&
+      manifestFold(spark, dir).aliveAt(dir, version).exists(e => dvd(canon(e.file)))
+  }
 
   /** Column-level twin of [[canon]]: strip the URI scheme + slash run down
     * to a single leading `/`, so `file:///x` (metadata column), `file:/x`
@@ -1345,11 +1330,7 @@ object DataLayout {
         // superset of the version's DV'd canonical names (saving this
         // job): extra names only route clean files through the masked
         // read, whose anti join then removes nothing — same rows
-        val dvCanon = dvCanonKnown
-          .orElse(dvCanonLocal(spark, dir, version)) // driver-side, no job
-          .getOrElse(
-            d.select(canonCol(col("file")).as("f")).distinct()
-              .collect().map(_.getString(0)).toSet) // O(dv-files): names only
+        val dvCanon = dvCanonKnown.getOrElse(dvFold(spark, dir).filesAt(version))
         val (hit, clean) = files.partition(f => dvCanon(canon(f)))
         val parts = Seq(
           if (clean.isEmpty) None
@@ -1374,7 +1355,7 @@ object DataLayout {
   private[layout] def maskIndexed(spark: SparkSession, dir: String,
       version: Long, df: DataFrame): DataFrame =
     dvAt(spark, dir, version) match {
-      case Some(d) if !d.isEmpty =>
+      case Some(d) if dvFold(spark, dir).filesAt(version).nonEmpty =>
         val cols = df.columns
         applyMask(df
           .withColumn(MetaFile, canonCol(col("_metadata.file_path")))
@@ -1423,7 +1404,7 @@ object DataLayout {
   private def deleteVectorsOnce(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)]): DvDeleteReport = {
     require(ranges.nonEmpty, "deleteVectors needs at least one (col, lo, hi) range")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     requireStats(aliveDf, ranges)
     val hit = aliveDf.where(envelopeCond(aliveDf.columns.toSet, ranges))
       .select("file")
@@ -1480,7 +1461,7 @@ object DataLayout {
 
   private def deleteVectorsWhereOnce(spark: SparkSession, dir: String,
       cond: Column): DvDeleteReport = {
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val alive = aliveDf.select("file")
       .collect().map(_.getString(0)).toIndexedSeq.sorted // O(files)
     if (alive.isEmpty) return DvDeleteReport(0, 0L, filesScanned = 0)
@@ -1511,15 +1492,9 @@ object DataLayout {
     * Delta's DELETE → REORG APPLY (PURGE) → VACUUM. */
   def purgeDeletes(spark: SparkSession, dir: String, dims: Seq[Column],
       bits: Int, statsCols: Seq[String]): PurgeReport = {
-    val aliveDf = pinned(aliveManifest(spark, dir))
-    val dvLocal = dvRowsLocal(spark, dir)
-    val dvCanon: Set[String] =
-      dvLocal.map(_.iterator.map(_._1).toSet).getOrElse(
-        dvAt(spark, dir, Latest) match {
-          case None => Set.empty
-          case Some(d) => d.select(canonCol(col("file")).as("f")).distinct()
-            .collect().map(_.getString(0)).toSet // O(dv-files): names only
-        })
+    val aliveDf = aliveManifest(spark, dir)
+    val dv = dvFold(spark, dir)
+    val dvCanon = dv.filesAt(Latest)
     val hit = aliveDf.select("file").collect().map(_.getString(0))
       .filter(f => dvCanon(canon(f))).toSeq.sorted
     if (hit.isEmpty) return PurgeReport(0, 0L)
@@ -1536,13 +1511,7 @@ object DataLayout {
     commitRewriteWithRetry(spark, dir, hit, v - 1, rowsAt, v)
     val hitCanon = hit.map(canon).toSet
     PurgeReport(filesRewritten = hit.size,
-      positionsApplied = dvLocal match {
-        case Some(rows) => // deduped driver-side (exact-count consumer)
-          rows.distinct.count(t => hitCanon(t._1)).toLong
-        case None => dvLogDeduped(spark, dir).map(
-          _.where(canonCol(col("file")).isin(hit.map(canon): _*)).count())
-          .getOrElse(0L)
-      })
+      positionsApplied = dv.positions(hitCanon))
   }
 
   final case class PurgeReport(filesRewritten: Int, positionsApplied: Long)
@@ -1569,11 +1538,9 @@ object DataLayout {
           // superseded commit files — and their tombstone rows — visible
           // for up to the grace window)
           val fs = fsOf(spark, dir)
-          manifestLog(spark, dir)
-            .where(!isSentinelFile(col("file")) && col("v_added").isNotNull)
-            .select("file").distinct()
-            .collect().map(_.getString(0)).sorted // O(files): names only
-            .find(f => fs.exists(new org.apache.hadoop.fs.Path(f)))
+          manifestFold(spark, dir).entries
+            .collect { case e if !e.sentinel && e.added.isDefined => e.file }
+            .sorted.find(f => fs.exists(new org.apache.hadoop.fs.Path(f)))
         }
       }
       .getOrElse(throw new IllegalArgumentException(
@@ -1614,10 +1581,10 @@ object DataLayout {
   def skipScan(spark: SparkSession, dir: String,
       ranges: Seq[(String, Any, Any)], version: Long = Latest): PrunedScan = {
     require(ranges.nonEmpty, "skipScan needs at least one (col, lo, hi) range")
-    val alive = pinned(aliveManifest(spark, dir, version))
+    val alive = aliveManifest(spark, dir, version)
     requireStats(alive, ranges)
-    // jobless on the LocalRelation path (project+collect constant-folds);
-    // one tiny collect on the checkpointed fallback — same as count()
+    // jobless: the alive manifest is a LocalRelation (project+collect
+    // constant-folds)
     val total = alive.select("file").collect().length
     val files = alive.where(envelopeCond(alive.columns.toSet, ranges))
       .select("file")
@@ -1658,16 +1625,11 @@ object DataLayout {
     val fs = fsOf(spark, dir)
     val mtimes: Seq[(Long, java.sql.Timestamp)] =
       Seq(manifestPath(dir), dvPath(dir)).flatMap { ld =>
-        val lp = new org.apache.hadoop.fs.Path(ld)
-        if (!fs.exists(lp)) Nil
-        else fs.listStatus(lp).toSeq.collect {
-          case s if s.isFile && s.getPath.getName.startsWith("commit-v") &&
-              s.getPath.getName.endsWith(".parquet") =>
-            val v = s.getPath.getName
-              .stripPrefix("commit-v").stripSuffix(".parquet")
-            scala.util.Try(v.toLong).toOption
-              .map(_ -> new java.sql.Timestamp(s.getModificationTime))
-        }.flatten
+        LogLocal.logFiles(fs, new org.apache.hadoop.fs.Path(ld)).getOrElse(Nil)
+          .filter(_.getPath.getName.startsWith("commit-v")).flatMap { s =>
+            s.getPath.getName.stripPrefix("commit-v").stripSuffix(".parquet")
+              .toLongOption.map(_ -> new java.sql.Timestamp(s.getModificationTime))
+          }
       }
     val ts = mtimes.toDF("version", "committed_at")
     // provenance: which transaction app/batch wrote a version (NULL for
@@ -1711,7 +1673,7 @@ object DataLayout {
       keyCol: String, version: Long = Latest): PrunedScan = {
     require(keys.columns.contains(keyCol),
       s"key frame has no column '$keyCol' (${keys.columns.mkString(",")})")
-    val alive = pinned(aliveManifest(spark, dir, version))
+    val alive = aliveManifest(spark, dir, version)
     requireStats(alive, Seq((keyCol, null, null)))
     val total = alive.select("file").collect().length
     val k = keys.select(col(keyCol).as("_k")).distinct()
@@ -1985,7 +1947,7 @@ object DataLayout {
       bits: Int, statsCols: Seq[String], rowsPerFile: Long,
       onlyFilesUnder: Long = Long.MaxValue): CompactReport = {
     require(rowsPerFile >= 1, s"rowsPerFile must be >= 1: $rowsPerFile")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val allAlive = aliveDf
       .select("file", "zmin", "zmax", "n_rows")
       .collect()
@@ -2077,7 +2039,7 @@ object DataLayout {
   def compactSmallFiles(spark: SparkSession, dir: String, dims: Seq[Column],
       bits: Int, statsCols: Seq[String], rowsPerFile: Long): CompactReport = {
     require(rowsPerFile >= 1, s"rowsPerFile must be >= 1: $rowsPerFile")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val allAlive = aliveDf.select("file", "zmin", "zmax", "n_rows").collect()
     // all-NULL-dim files have no z position: skip, as compactZOrdered does
     val alive = allAlive.filterNot(r => r.isNullAt(1) || r.isNullAt(2))
@@ -2144,7 +2106,7 @@ object DataLayout {
       bits: Int, statsCols: Seq[String],
       ranges: Seq[(String, Any, Any)]): DeleteReport = {
     require(ranges.nonEmpty, "deleteWhere needs at least one (col, lo, hi) range")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     requireStats(aliveDf, ranges)
     val aliveFiles = aliveDf.select("file").collect() // jobless when local
     val aliveCount = aliveFiles.length
@@ -2205,7 +2167,7 @@ object DataLayout {
     * observed metric above the range exchange (see [[deleteWhere]]). */
   def deleteRowsWhere(spark: SparkSession, dir: String, dims: Seq[Column],
       bits: Int, statsCols: Seq[String], cond: Column): DeleteReport = {
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val all = aliveDf.select("file")
       .collect().map(_.getString(0)).toIndexedSeq.sorted // O(files)
     if (all.isEmpty) return DeleteReport(0, 0L, 0)
@@ -2251,7 +2213,7 @@ object DataLayout {
       bits: Int, statsCols: Seq[String], cond: Column,
       assignments: Map[String, Column]): UpdateReport = {
     require(assignments.nonEmpty, "updateWhere needs at least one SET column")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val all = aliveDf.select("file")
       .collect().map(_.getString(0)).toIndexedSeq.sorted // O(files)
     if (all.isEmpty) return UpdateReport(0, 0L, 0, filesScanned = 0)
@@ -2360,143 +2322,55 @@ object DataLayout {
     // soft delete) landing after this listing is neither compacted into the
     // new base nor on the deletion list, so it survives the vacuum with its
     // rows fully visible; its DATA files are protected by the grace window
-    // below. This is what makes "a concurrent append between its write and
-    // its commit" genuinely supported rather than half-supported: the old
-    // mode("overwrite") log rewrite erased any commit file that landed
-    // after the read, permanently orphaning the append's data.
-    def logSnapshot(ld: String): Seq[String] = {
-      val lp = new org.apache.hadoop.fs.Path(ld)
-      if (!fs.exists(lp)) Nil
-      else fs.listStatus(lp).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).sorted
-    }
-    val snapM = logSnapshot(manifestPath(dir))
+    // below. The listing is the log readers' own visible-file rule: an
+    // in-flight driver-staged commit (`_stage_*.parquet`) is not a log file
+    // until its rename, and reading one by explicit path after it was
+    // renamed or swept fails.
+    def logSnapshot(ld: String): Seq[org.apache.hadoop.fs.FileStatus] =
+      LogLocal.logFiles(fs, new org.apache.hadoop.fs.Path(ld)).getOrElse(Nil)
+        .sortBy(_.getPath.toString)
+    val snapMFiles = logSnapshot(manifestPath(dir))
+    val snapDvFiles = logSnapshot(dvPath(dir))
+    val snapM = snapMFiles.map(_.getPath.toString)
     require(snapM.nonEmpty, s"no layout (manifest) at $dir to vacuum")
-    val snapDv = logSnapshot(dvPath(dir))
-    // the snapshot as a LocalRelation when small (driver-side read — the
-    // aggregations and set derivations below then run over local rows
-    // instead of re-scanning parquet per probe); distributed + pinned
-    // fallback past the size guard
-    val localLog = LogLocal.read(spark, manifestPath(dir), Some(snapM))
-    val log = localLog match {
-      case Some((schema, rows)) =>
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      case None => spark.read.option("mergeSchema", "true").parquet(snapM: _*)
-        .localCheckpoint(true)
+    val snapDv = snapDvFiles.map(_.getPath.toString)
+    // the snapshot's raw rows on the driver (past the size cap a Spark read
+    // collects them — the compacted base below is collected to stage it
+    // either way); everything below derives from them and their replay
+    val (schema, rows) = manifestRowsLocal(spark, dir, Some(snapM)).getOrElse {
+      val df = spark.read.option("mergeSchema", "true").parquet(snapM: _*)
+      (df.schema, df.collect().toVector)
     }
-    val dvSnap: Option[DataFrame] =
-      if (snapDv.isEmpty) None
-      else Some(spark.read.schema("file STRING, pos BIGINT, v BIGINT")
-        .parquet(snapDv: _*))
-    val logBefore = localLog.map(_._2.size.toLong).getOrElse(log.count())
+    val m = foldManifest(schema, rows)
     // hwm/horizon from the SNAPSHOT (not a dir re-read): the base this
-    // vacuum writes must describe exactly the rows it read. Driver-side
-    // on the local-log path; the DV leg parses the snapshot's commit-v
-    // names (a vacuum base only carries versions at or below the manifest
-    // hwm marker, which the manifest leg already covers — same argument
-    // as [[dvMaxVersion]]), falling back to the distributed agg on any
-    // unrecognized name.
-    val hwm = {
-      val hm = localLog match {
-        case Some((s, rows)) =>
-          val iA = s.fieldNames.indexOf("v_added")
-          val iR = s.fieldNames.indexOf("v_removed")
-          if (rows.isEmpty || iA < 0 || iR < 0) -1L
-          else rows.iterator.map { r =>
-            math.max(if (r.isNullAt(iA)) -1L else r.getLong(iA),
-              if (r.isNullAt(iR)) -1L else r.getLong(iR))
-          }.max
-        case None =>
-          val m = log.agg(max(greatest(coalesce(col("v_added"), lit(-1L)),
-            coalesce(col("v_removed"), lit(-1L))))).head()
-          if (m.isNullAt(0)) -1L else m.getLong(0)
-      }
-      val dvParsed: Seq[Option[Long]] = snapDv
-        .map(new org.apache.hadoop.fs.Path(_).getName).map {
-          case n if n.startsWith("commit-v") =>
-            n.stripPrefix("commit-v").stripSuffix(".parquet").toLongOption
-          case n if n.startsWith("vacuum-") => Some(-1L)
-          case _ => None
-        }
-      val hd =
-        if (dvParsed.forall(_.isDefined)) (-1L +: dvParsed.flatten).max
-        else dvSnap.map(_.agg(max("v")).head())
-          .filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(-1L)
-      math.max(hm, hd)
-    }
-    val priorHorizon = localLog match {
-      case Some((s, rows)) =>
-        val iF = s.fieldNames.indexOf("file")
-        val iA = s.fieldNames.indexOf("v_added")
-        val hs = rows.iterator.filter(r => iF >= 0 && iA >= 0 &&
-          !r.isNullAt(iF) && r.getString(iF) == VersionHorizonFile &&
-          !r.isNullAt(iA)).map(_.getLong(iA))
-        if (hs.hasNext) hs.max else 0L
-      case None =>
-        val r = log.where(col("file") === VersionHorizonFile)
-          .agg(max("v_added")).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    val horizon = math.max(priorHorizon, math.max(0L, hwm - retainVersions))
+    // vacuum writes must describe exactly the rows it read
+    val hwm = math.max(m.maxVersion, dvMaxVersion(spark, dir, Some(snapDv)))
+    val horizon = math.max(m.horizon, math.max(0L, hwm - retainVersions))
     // a file is retained iff alive at SOME version in [horizon, hwm]:
     // never tombstoned, or tombstoned after the horizon. Its rows keep
     // their original v_added/v_removed so every retained version still
-    // reconstructs exactly. kept collapses rows lingering from prior
+    // reconstructs exactly. keptRows collapses rows lingering from prior
     // bases (grace-deferred reclaim below) — exact dups only, so legit
-    // rows (one add + one tombstone per file) are never merged. All of
-    // it driver-side on the local-log path; the fallback pins the
-    // distributed frame before any deletion (it reads the very files
-    // this vacuum may reclaim).
-    val (kept: DataFrame, retainedCanon: Set[String], loggedCanon: Set[String]) =
-      localLog match {
-        case Some((s, rows)) =>
-          val iF = s.fieldNames.indexOf("file")
-          val iR = s.fieldNames.indexOf("v_removed")
-          val real = rows.filter(r =>
-            !r.isNullAt(iF) && !r.getString(iF).startsWith("_graft_"))
-          val maxVr = scala.collection.mutable.Map.empty[String, Option[Long]]
-          for (r <- real) {
-            val f = r.getString(iF)
-            val vr = if (r.isNullAt(iR)) None else Some(r.getLong(iR))
-            maxVr(f) = (maxVr.get(f).flatten, vr) match {
-              case (Some(a), Some(b)) => Some(math.max(a, b))
-              case (a, b) => a.orElse(b)
-            }
-          }
-          val retained = maxVr.collect {
-            case (f, vr) if vr.forall(_ > horizon) => f
-          }.toSet
-          // value-equality dedup key: byte arrays compare by content
-          def key(r: org.apache.spark.sql.Row): Seq[Any] =
-            r.toSeq.map {
-              case b: Array[Byte] => b.toSeq
-              case x => x
-            }
-          val seen = scala.collection.mutable.Set.empty[Seq[Any]]
-          val keptRows = real.filter(r => retained(r.getString(iF)) &&
-            seen.add(key(r)))
-          (spark.createDataFrame(java.util.Arrays.asList(keptRows: _*), s),
-            keptRows.map(r => canon(r.getString(iF))).toSet,
-            real.map(r => canon(r.getString(iF))).toSet)
-        case None =>
-          val real = log.where(!isSentinelFile(col("file")))
-          val retainedNames = real.groupBy("file")
-            .agg(max("v_removed").as("_vr"))
-            .where(col("_vr").isNull || col("_vr") > horizon)
-            .select("file")
-          val keptDf = real.join(retainedNames, Seq("file"), "left_semi")
-            .dropDuplicates()
-            .localCheckpoint(true)
-          (keptDf,
-            keptDf.select("file").distinct()
-              .collect().map(r => canon(r.getString(0))).toSet,
-            real.select("file").distinct()
-              .collect().map(r => canon(r.getString(0))).toSet)
+    // rows (one add + one tombstone per file) are never merged.
+    val real = m.entries.filterNot(_.sentinel)
+    val retained = real.collect { case e if e.removed.forall(_ > horizon) => e.file }.toSet
+    val retainedCanon = retained.map(canon)
+    val loggedCanon = real.map(e => canon(e.file)).toSet
+    val iF = schema.fieldIndex("file")
+    // value-equality dedup key: byte arrays compare by content
+    def key(r: org.apache.spark.sql.Row): Seq[Any] =
+      r.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case x => x
       }
+    val seen = scala.collection.mutable.Set.empty[Seq[Any]]
+    val keptRows = rows.filter(r => !r.isNullAt(iF) &&
+      retained(r.getString(iF)) && seen.add(key(r)))
     val now = System.currentTimeMillis()
-    def oldEnough(p: org.apache.hadoop.fs.Path): Boolean =
-      now - fs.getFileStatus(p).getModificationTime > graceMs
+    // ages come from the listing that found each entry: a stage renamed
+    // or swept after the listing must not fail a by-path re-stat
+    def oldEnough(s: org.apache.hadoop.fs.FileStatus): Boolean =
+      now - s.getModificationTime > graceMs
     var removed = 0
     // parents whose files THIS vacuum reclaimed: an append-v subdir so
     // emptied is certainly not a live append's (its files were logged
@@ -2505,7 +2379,7 @@ object DataLayout {
     val emptiedParents = scala.collection.mutable.Set.empty[String]
     for (f <- listDataFiles(spark, dir) if !retainedCanon(canon(f))) {
       val p = new org.apache.hadoop.fs.Path(f)
-      if ((loggedCanon(canon(f)) || oldEnough(p)) &&
+      if ((loggedCanon(canon(f)) || oldEnough(fs.getFileStatus(p))) &&
         fs.delete(p, false)) {
         removed += 1
         emptiedParents += canon(p.getParent.toString)
@@ -2518,64 +2392,35 @@ object DataLayout {
     //    tombstones, currentVersion would regress, and the next mutation
     //    would REUSE an already-issued version id;
     //  - the HORIZON, so time travel below it refuses with a clear error
-    //    instead of returning a silently partial table.
-    def marker(name: String, v: Long) = {
-      import org.apache.spark.sql.Row
-      val vals = kept.schema.fields.map {
-        case f if f.name == "file" => name
-        case f if f.name == "v_added" => java.lang.Long.valueOf(v)
-        case f if f.name == "v_removed" => java.lang.Long.valueOf(v)
+    //    instead of returning a silently partial table;
+    //  - exactly-once durability: each txn app's committed-batch high-water
+    //    mark must SURVIVE the log rows that carried it (a compaction
+    //    tombstoned them; this vacuum may reclaim them) — one synthetic
+    //    row per app from the FULL pre-vacuum log, so lastCommittedTxn
+    //    keeps refusing zombie replays forever.
+    def marker(name: String, v: Long, app: String = null,
+        batch: java.lang.Long = null) =
+      org.apache.spark.sql.Row.fromSeq(schema.fields.toSeq.map(_.name match {
+        case "file" => name
+        case "v_added" | "v_removed" => java.lang.Long.valueOf(v)
+        case "txn_app" => app
+        case "txn_batch" => batch
         case _ => null
+      }))
+    val txnHwms = scala.collection.mutable.Map.empty[String, Long]
+    if (schema.fieldNames.contains("txn_app")) {
+      val iApp = schema.fieldIndex("txn_app")
+      val iB = schema.fieldIndex("txn_batch")
+      for (r <- rows if !r.isNullAt(iApp) && !r.isNullAt(iB)) {
+        val app = r.getString(iApp)
+        if (txnHwms.getOrElse(app, Long.MinValue) < r.getLong(iB))
+          txnHwms(app) = r.getLong(iB)
       }
-      spark.createDataFrame(
-        java.util.Arrays.asList(Row(vals.toIndexedSeq: _*)), kept.schema)
     }
-    val markers =
-      if (horizon > 0) marker(VersionHwmFile, hwm)
-        .unionByName(marker(VersionHorizonFile, horizon))
-      else marker(VersionHwmFile, hwm)
-    // exactly-once durability: each txn app's committed-batch high-water
-    // mark must SURVIVE the log rows that carried it (a compaction
-    // tombstoned them; this vacuum may reclaim them) — re-emit one
-    // synthetic never-alive row per app from the FULL pre-vacuum log, so
-    // lastCommittedTxn keeps refusing zombie replays forever
-    val txnMarkers =
-      if (!log.columns.contains("txn_app")) None
-      else localLog match {
-        case Some((s, rows)) => // driver-side: one row per app, max batch
-          val iApp = s.fieldNames.indexOf("txn_app")
-          val iB = s.fieldNames.indexOf("txn_batch")
-          val hwms = scala.collection.mutable.Map.empty[String, Long]
-          for (r <- rows if !r.isNullAt(iApp) && !r.isNullAt(iB)) {
-            val app = r.getString(iApp)
-            val b = r.getLong(iB)
-            if (hwms.getOrElse(app, Long.MinValue) < b) hwms(app) = b
-          }
-          if (hwms.isEmpty) None
-          else Some(spark.createDataFrame(
-            java.util.Arrays.asList(hwms.toSeq.sortBy(_._1).map {
-              case (app, batch) =>
-                org.apache.spark.sql.Row.fromSeq(kept.schema.fields.toSeq.map {
-                  f => f.name match {
-                    case "file" => TxnHwmFilePrefix + app
-                    case "v_added" | "v_removed" => java.lang.Long.valueOf(hwm)
-                    case "txn_app" => app
-                    case "txn_batch" => java.lang.Long.valueOf(batch)
-                    case _ => null
-                  }
-                })
-            }: _*), kept.schema))
-        case None => Some(log.where(col("txn_app").isNotNull)
-        .groupBy("txn_app").agg(max("txn_batch").as("txn_batch"))
-        .select(kept.schema.fields.toSeq.map { f => f.name match {
-          case "file" =>
-            concat(lit(TxnHwmFilePrefix), col("txn_app")).as("file")
-          case "v_added" | "v_removed" => lit(hwm).cast("long").as(f.name)
-          case "txn_app" => col("txn_app")
-          case "txn_batch" => col("txn_batch").cast(f.dataType).as("txn_batch")
-          case other => lit(null).cast(f.dataType).as(other)
-        }}: _*))
-      }
+    val markers = Seq(marker(VersionHwmFile, hwm)) ++
+      (if (horizon > 0) Seq(marker(VersionHorizonFile, horizon)) else Nil) ++
+      txnHwms.toSeq.sortBy(_._1).map { case (app, batch) =>
+        marker(TxnHwmFilePrefix + app, hwm, app, batch) }
     // COMPACT, don't overwrite: the new base lands as ONE uniquely-named
     // file first; the files it supersedes are deleted ONLY once aged past
     // the grace window (this vacuum for old ones, a later vacuum for the
@@ -2587,20 +2432,17 @@ object DataLayout {
     // duplicates — idempotent under every log consumer (aliveManifest's
     // per-file groupBy/max, the max-based version/txn/horizon probes, and
     // history's dropDuplicates).
-    writeCompactedLog(spark, manifestPath(dir),
-      normalizeLog(txnMarkers.fold(kept.unionByName(markers))(t =>
-        kept.unionByName(markers).unionByName(t))), smallMeta = true)
-    for (f <- snapM) {
-      val p = new org.apache.hadoop.fs.Path(f)
-      if (oldEnough(p)) fs.delete(p, false)
-    }
+    writeCompactedLog(spark, manifestPath(dir), normalizeLog(spark.createDataFrame(
+      java.util.Arrays.asList(keptRows ++ markers: _*), schema)), smallMeta = true)
+    snapMFiles.filter(oldEnough).foreach(s => fs.delete(s.getPath, false))
     // compact the DV log too: rows addressing just-deleted files can never
     // be consulted again (their versions are unreadable post-vacuum), while
     // rows on RETAINED files must survive — they still mask reads at every
     // retained version until a purge rewrites those files. Same
     // snapshot-compact-delete discipline as the manifest: a DV commit
     // racing this vacuum survives untouched.
-    dvSnap.foreach { d =>
+    if (snapDv.nonEmpty) {
+      val d = spark.read.schema(DvSchema).parquet(snapDv: _*)
       val keptNames = spark.createDataset(retainedCanon.toSeq)(
         org.apache.spark.sql.Encoders.STRING).toDF("_kept_f")
       val dvKept = d.join(keptNames,
@@ -2608,10 +2450,7 @@ object DataLayout {
         .dropDuplicates() // collapse rows still lingering from prior bases
         .localCheckpoint(true)
       if (dvKept.count() > 0L) writeCompactedLog(spark, dvPath(dir), dvKept)
-      for (f <- snapDv) {
-        val p = new org.apache.hadoop.fs.Path(f)
-        if (oldEnough(p)) fs.delete(p, false)
-      }
+      snapDvFiles.filter(oldEnough).foreach(s => fs.delete(s.getPath, false))
     }
     // sweep crashed commit stages: a `_stage_*` dir is either the residue
     // of a writer that died before its rename (reclaim it) or an in-flight
@@ -2622,8 +2461,7 @@ object DataLayout {
       if (fs.exists(lp))
         fs.listStatus(lp)
           // dirs (Spark-staged) AND single files (driver-staged writeLocal)
-          .filter(s => s.getPath.getName.startsWith("_stage_") &&
-            oldEnough(s.getPath))
+          .filter(s => s.getPath.getName.startsWith("_stage_") && oldEnough(s))
           .foreach(s => fs.delete(s.getPath, s.isDirectory))
     }
     // ...and crashed REWRITE stages at the dir root (`_graft_*_stage`,
@@ -2637,7 +2475,7 @@ object DataLayout {
     if (fs.exists(rootP))
       fs.listStatus(rootP)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("_graft_") &&
-          s.getPath.getName.endsWith("_stage") && oldEnough(s.getPath))
+          s.getPath.getName.endsWith("_stage") && oldEnough(s))
         .foreach(s => fs.delete(s.getPath, true))
     // direct-commit subdirs (append-v* / rewrite-*): one the deletions
     // above emptied goes now (mtime just bumped, but no live writer can
@@ -2651,15 +2489,15 @@ object DataLayout {
       fs.listStatus(rootP)
         .filter(s => s.isDirectory && isDirectSubdirName(s.getPath.getName) &&
           noDataLeft(s.getPath) &&
-          (oldEnough(s.getPath) || emptiedParents(canon(s.getPath.toString))))
+          (oldEnough(s) || emptiedParents(canon(s.getPath.toString))))
         .foreach(s => fs.delete(s.getPath, true))
     val bloomRoot = new org.apache.hadoop.fs.Path(s"$dir/$BloomDir")
     if (fs.exists(bloomRoot))
       fs.listStatus(bloomRoot)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("_stage_") &&
-          oldEnough(s.getPath))
+          oldEnough(s))
         .foreach(s => fs.delete(s.getPath, true))
-    VacuumReport(filesDeleted = removed, logRowsBefore = logBefore,
+    VacuumReport(filesDeleted = removed, logRowsBefore = rows.size.toLong,
       logRowsAfter = retainedCanon.size.toLong)
   }
 
@@ -2692,26 +2530,9 @@ object DataLayout {
 
   /** The layout's vacuum horizon — the lowest time-travelable version.
     * 0 when never vacuumed with retention (or no layout yet). */
-  def vacuumHorizon(spark: SparkSession, dir: String): Long = {
-    if (!fsOf(spark, dir).exists(
-      new org.apache.hadoop.fs.Path(manifestPath(dir)))) return 0L
-    manifestRowsLocal(spark, dir).filter { case (s, _) =>
-      Seq("file", "v_added").forall(s.fieldNames.contains)
-    } match {
-      case Some((s, rows)) =>
-        val iF = s.fieldNames.indexOf("file")
-        val iA = s.fieldNames.indexOf("v_added")
-        val hs = rows.iterator.filter(r =>
-          !r.isNullAt(iF) && r.getString(iF) == VersionHorizonFile &&
-            !r.isNullAt(iA)).map(_.getLong(iA))
-        if (hs.hasNext) hs.max else 0L
-      case None =>
-        val r = manifestLog(spark, dir)
-          .where(col("file") === VersionHorizonFile)
-          .agg(max("v_added")).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-  }
+  def vacuumHorizon(spark: SparkSession, dir: String): Long =
+    if (!fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(manifestPath(dir)))) 0L
+    else manifestFold(spark, dir).horizon
 
   final case class VacuumReport(filesDeleted: Int, logRowsBefore: Long,
       logRowsAfter: Long)
@@ -2748,7 +2569,7 @@ object DataLayout {
     require(fsOf(spark, srcDir).exists(
       new org.apache.hadoop.fs.Path(manifestPath(srcDir))),
       s"no layout (manifest) at $srcDir")
-    val alive = pinned(aliveManifest(spark, srcDir, version))
+    val alive = aliveManifest(spark, srcDir, version)
     val n = alive.count()
     require(n > 0, s"layout at $srcDir has no alive files at version $version")
     val fs = fsOf(spark, dstDir)
@@ -2790,143 +2611,32 @@ object DataLayout {
       toVersion: Long, keyCols: Seq[String],
       compareCols: Seq[String] = Nil): VersionDiff = {
     val (lo, hi) = (math.min(fromVersion, toVersion), math.max(fromVersion, toVersion))
-    // ONE O(files) manifest pass decides everything file-shaped below —
-    // both versions' alive sets, the fingerprint map AND the vacuum
-    // horizon (the r18 spelling paid two aliveManifest jobs, a third
-    // groupBy for fingerprints and a horizon probe; at sf0.1 those fixed
-    // per-call jobs dominated this operator's cost). The null-safe max
-    // collapses each file's added row, tombstone twin and
-    // vacuum-lingering duplicates — all carry identical values.
-    val fileRows: Array[(String, Long, Long, String, Long)] =
-      manifestRowsLocal(spark, dir).filter { case (s, _) =>
-        Seq("file", "v_added", "v_removed").forall(s.fieldNames.contains)
-      } match {
-        case Some((s, rows)) =>
-          // jobless twin of the groupBy below (driver rows, same
-          // max-per-file semantics; per file all rows carry one fp/nr)
-          val iF = s.fieldNames.indexOf("file")
-          val iA = s.fieldNames.indexOf("v_added")
-          val iR = s.fieldNames.indexOf("v_removed")
-          val iFp = s.fieldNames.indexOf("content_fp")
-          val iNr = s.fieldNames.indexOf("n_rows")
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Any, Any, Any, Any)]
-          def g(r: org.apache.spark.sql.Row, i: Int): Any =
-            if (i < 0 || r.isNullAt(i)) null else r.get(i)
-          for (r <- rows) {
-            val f = r.getString(iF)
-            val p = acc.getOrElse(f, (null, null, null, null))
-            acc(f) = (LogLocal.maxVal(p._1, g(r, iA)),
-              LogLocal.maxVal(p._2, g(r, iR)),
-              LogLocal.maxVal(p._3, g(r, iFp)),
-              LogLocal.maxVal(p._4, g(r, iNr)))
-          }
-          acc.iterator.map { case (f, (va, vr, fp, nr)) =>
-            (f,
-              if (va == null) Long.MinValue else va.asInstanceOf[Long],
-              if (vr == null) Long.MaxValue else vr.asInstanceOf[Long],
-              if (fp == null) null
-              else fp.asInstanceOf[java.math.BigDecimal].toPlainString,
-              if (nr == null) -1L else nr.asInstanceOf[Long])
-          }.toArray
-        case None =>
-          val mLog = manifestLog(spark, dir)
-          val hasFp = mLog.columns.contains("content_fp")
-          val hasNr = mLog.columns.contains("n_rows")
-          mLog.groupBy("file")
-            .agg(max("v_added").as("va"), max("v_removed").as("vr"),
-              (if (hasFp) max(col("content_fp").cast("string"))
-               else lit(null).cast("string")).as("fp"),
-              (if (hasNr) max("n_rows") else lit(null).cast("long")).as("nr"))
-            .collect().map(r => (r.getString(0),
-              if (r.isNullAt(1)) Long.MinValue else r.getLong(1),
-              if (r.isNullAt(2)) Long.MaxValue else r.getLong(2),
-              if (r.isNullAt(3)) null else r.getString(3),
-              if (r.isNullAt(4)) -1L else r.getLong(4)))
-      }
-    // the horizon guard the per-version aliveManifest reads used to
-    // supply: a diff reaching below it would reconstruct from vacuumed
-    // files (negative versions are the synthetic "before anything" state).
-    // Derived from the same collect — the horizon marker is a sentinel
-    // row keyed by [[VersionHorizonFile]].
-    val h = fileRows.find(_._1 == VersionHorizonFile)
-      .map(_._2).filter(_ != Long.MinValue).getOrElse(0L)
-    Seq(fromVersion, toVersion).filter(v => v != Latest && v >= 0).foreach(v =>
-      require(v >= h,
-        s"version $v of $dir predates the vacuum horizon $h — its files " +
-          "were physically removed; time travel reaches versions >= " +
-          s"$h. Vacuum with a larger retainVersions to keep more history."))
-    // alive at v = added at or before, not tombstoned at or before —
-    // the driver twin of [[aliveManifest]]'s predicate (MinValue encodes
-    // a null v_added: a tombstone-only row is alive nowhere)
-    def aliveAt(v: Long): Set[String] = fileRows.collect {
-      case t if t._2 != Long.MinValue && t._2 <= v && t._3 > v => t._1
-    }.toSet
-    val fa = aliveAt(fromVersion)
-    val fb = aliveAt(toVersion)
+    // ONE manifest replay decides everything file-shaped below — both
+    // versions' alive sets (each horizon-checked), the fingerprints — and
+    // one DV replay everything DV-shaped
+    val m = manifestFold(spark, dir)
+    val fa = m.aliveAt(dir, fromVersion).map(_.file).toSet
+    val fb = m.aliveAt(dir, toVersion).map(_.file).toSet
     val onlyA = (fa -- fb).toSeq.sorted
     val onlyB = (fb -- fa).toSeq.sorted
     // DELETION VECTORS break "shared file ⇒ identical rows": a file alive
     // in both versions still differs if a DV landed on it in between. Pull
     // those files onto BOTH sides, each masked at its own version — cost
-    // stays ∝ churn (files a delete touched), never table size. One
-    // O(dv-files) probe feeds the in-range set, the ever-DV'd set (the
-    // fingerprint veto) and the masked reads' file partitioning below.
-    val dvRows: Array[(String, Long)] =
-      dvRowsLocal(spark, dir) match {
-        case Some(rs) => rs.iterator.map(t => (t._1, t._3)).toSet.toArray
-        case None => dvLog(spark, dir) match {
-          case None => Array.empty
-          case Some(d) => d.select(canonCol(col("file")).as("f"), col("v"))
-            .distinct().collect().map(r => (r.getString(0), r.getLong(1)))
-        }
-      }
-    val dvdEver: Set[String] = dvRows.map(_._1).toSet
+    // stays ∝ churn (files a delete touched), never table size. The DV
+    // replay feeds the in-range set, the ever-DV'd set (the fingerprint
+    // veto) and the masked reads' file partitioning below.
+    val dv = dvFold(spark, dir)
+    val dvdEver: Set[String] = dv.filesAt(Latest)
     val dvInRange: Set[String] =
-      dvRows.collect { case (f, v) if v > lo && v <= hi => f }.toSet
+      dv.entries.collect { case e if e.v > lo && e.v <= hi => e.file }.toSet
     val dvChanged: Seq[String] =
       (fa intersect fb).filter(f => dvInRange(canon(f))).toSeq.sorted
-    // FINGERPRINT fast path (r18, mirroring diffLayouts' file cancel): a
-    // file-moving-but-row-preserving step (compaction, recluster,
-    // bin-pack) leaves (fp, rows)-equal multisets on the two sides — such
-    // pairs cancel and read NOTHING. DV-carrying files never cancel
-    // (bytes ≠ effective rows); fingerprint-less files always read.
-    val fpMap: Map[String, (String, Long)] = fileRows.flatMap { t =>
-      if (t._4 == null || t._5 < 0 || t._1.startsWith("_graft_")) None
-      else Some(t._1 -> ((t._4, t._5)))
-    }.toMap
-    def usable(f: String) = fpMap.contains(f) && !dvdEver(canon(f))
-    def fpCounts(fs: Seq[String]): Map[(String, Long), Int] =
-      fs.filter(usable).map(fpMap).groupBy(identity)
-        .map { case (k, v) => k -> v.size }
-    def unmatched(fs: Seq[String],
-        other: Map[(String, Long), Int]): Seq[String] = {
-      val budget = scala.collection.mutable.Map(other.toSeq: _*)
-      fs.flatMap { f =>
-        if (!usable(f)) Some(f)
-        else {
-          val k = fpMap(f)
-          val c = budget.getOrElse(k, 0)
-          if (c > 0) { budget(k) = c - 1; None } else Some(f)
-        }
-      }
-    }
-    // ADDITIVITY first: when every churned file is usable and the two
-    // sides' fingerprint/row-count SUMS agree, the whole churn is a
-    // row-preserving rewrite (compaction merges 2 files into 1 — no
-    // per-file pair can match, but the sums do) and nothing reads;
-    // otherwise per-file (fp, rows) pairs cancel multiset-wise and only
-    // the genuine remainder reads
-    val sumsCancel = onlyA.nonEmpty && onlyB.nonEmpty &&
-      onlyA.forall(usable) && onlyB.forall(usable) && {
-        def tot(fs: Seq[String]) = (fs.map(f => BigDecimal(fpMap(f)._1)).sum,
-          fs.map(f => fpMap(f)._2).sum)
-        tot(onlyA) == tot(onlyB)
-      }
-    val readA =
-      if (sumsCancel) Nil else unmatched(onlyA, fpCounts(onlyB)).sorted
-    val readB =
-      if (sumsCancel) Nil else unmatched(onlyB, fpCounts(onlyA)).sorted
+    // FINGERPRINT fast path: a file-moving-but-row-preserving step
+    // (compaction, recluster, bin-pack) cancels and reads NOTHING.
+    // DV-carrying files never cancel (bytes ≠ effective rows).
+    val fps = m.entries.map(e => e.file -> e.fingerprint).toMap
+    def fp(f: String) = f -> fps(f).filterNot(_ => dvdEver(canon(f)))
+    val (readA, readB) = fpUncancelled(onlyA.map(fp), onlyB.map(fp))
     // both sides read under the RANGE END's schema: a compare column that
     // arrived mid-range reads NULL on the older side instead of erroring
     val hiSchema = schemaAt(spark, dir, hi)
@@ -2935,9 +2645,8 @@ object DataLayout {
       // the version's OWN DV'd-file set (not dvdEver): a side whose
       // version predates every DV — the from side of a first delete —
       // then reads plain, no meta columns, no anti join
-      val dvAtV = dvRows.collect { case (f, dv) if dv <= v => f }.toSet
       if (fl.nonEmpty)
-        readMasked(spark, dir, fl, v, hiSchema, dvCanonKnown = Some(dvAtV))
+        readMasked(spark, dir, fl, v, hiSchema, dvCanonKnown = Some(dv.filesAt(v)))
       else readLayout(spark, dir, hi).where(lit(false))
     }
     val diff = graft.diff.JoinDiffer.diff(
@@ -2950,6 +2659,34 @@ object DataLayout {
 
   final case class VersionDiff(df: DataFrame, filesReadA: Int,
       filesReadB: Int, filesUnchanged: Int)
+
+  /** FINGERPRINT CANCEL, shared by every file-set diff: of two sides'
+    * files (each with its usable (content fingerprint, rows) pair, if
+    * any), the ones whose rows must still be read, each side sorted.
+    * ADDITIVITY first: when every file is usable and the two sides'
+    * fingerprint and row-count SUMS agree, the whole difference is a
+    * row-preserving rewrite (compaction merges 2 files into 1 — no
+    * per-file pair matches, the sums do) and nothing reads. Otherwise
+    * equal pairs cancel multiset-wise, in file-name order, and the
+    * remainder reads; a file without a usable pair always reads. Equality
+    * is checksum-grade (64-bit sums), the acceptance the reference's
+    * hashdiff rests on. */
+  private def fpUncancelled(a: Seq[(String, Option[(BigDecimal, Long)])],
+      b: Seq[(String, Option[(BigDecimal, Long)])]): (Seq[String], Seq[String]) = {
+    def total(side: Seq[(String, Option[(BigDecimal, Long)])]) =
+      (side.map(_._2.get._1).sum, side.map(_._2.get._2).sum)
+    if ((a ++ b).forall(_._2.isDefined) && total(a) == total(b)) return (Nil, Nil)
+    def unmatched(side: Seq[(String, Option[(BigDecimal, Long)])],
+        other: Seq[(String, Option[(BigDecimal, Long)])]): Seq[String] = {
+      val budget = scala.collection.mutable.Map.empty[(BigDecimal, Long), Int]
+      other.flatMap(_._2).foreach(k => budget(k) = budget.getOrElse(k, 0) + 1)
+      side.sortBy(_._1).flatMap {
+        case (_, Some(k)) if budget.getOrElse(k, 0) > 0 => budget(k) -= 1; None
+        case (f, _) => Some(f)
+      }
+    }
+    (unmatched(a, b), unmatched(b, a))
+  }
 
   /** The diff between TWO LAYOUTS at file granularity — the nightly
     * replica-verify operator: [[diffVersions]]' rsync trick generalized
@@ -2993,29 +2730,14 @@ object DataLayout {
     // deletes are outstanding on the source (those files would have to be
     // read anyway if left unmatched; computing their fp instead lets every
     // clean file still cancel).
-    def side(dir: String, v: Long): (Seq[String], Map[String, (String, Long)]) = {
-      // no checkpoint: the frame is collected exactly once below
-      val alive = aliveManifest(spark, dir, v)
-      val dvd: Set[String] = dvAt(spark, dir, v) match {
-        case None => Set.empty
-        case Some(d) => d.select(canonCol(col("file")).as("f")).distinct()
-          .collect().map(_.getString(0)).toSet // O(dv-files): names only
-      }
-      val hasFp = alive.columns.contains("content_fp")
-      val rows = (if (hasFp)
-          alive.select(col("file"), col("content_fp").cast("string"),
-            col("n_rows"))
-        else alive.select(col("file"), lit(null).cast("string"),
-          col("n_rows")))
-        .collect() // O(files): names + one decimal string each
-      val files = rows.map(_.getString(0)).toIndexedSeq.sorted
-      val recorded = rows.flatMap { r =>
-        val f = r.getString(0)
-        if (r.isNullAt(1) || dvd(canon(f))) None
-        else Some(f -> ((r.getString(1), r.getLong(2))))
-      }.toMap
+    def side(dir: String, v: Long): (Seq[String], Map[String, (BigDecimal, Long)]) = {
+      val alive = manifestFold(spark, dir).aliveAt(dir, v)
+      val dvd = dvFold(spark, dir).filesAt(v)
+      val files = alive.map(_.file).sorted
+      val recorded = alive.flatMap(e =>
+        e.fingerprint.filterNot(_ => dvd(canon(e.file))).map(e.file -> _)).toMap
       val dvdFiles = files.filter(f => dvd(canon(f)))
-      val effective: Map[String, (String, Long)] =
+      val effective: Map[String, (BigDecimal, Long)] =
         if (dvdFiles.isEmpty) Map.empty
         else {
           // the canonical file-path meta column survives the mask's anti
@@ -3026,9 +2748,9 @@ object DataLayout {
           val dataCols = masked.columns.filterNot(Set(MetaFile, MetaPos)).toSeq
           val byCanon = masked
             .groupBy(col(MetaFile).as("_f"))
-            .agg(contentFingerprint(dataCols).cast("string").as("_fp"),
-              count(lit(1)).as("_n"))
-            .collect().map(r => r.getString(0) -> ((r.getString(1), r.getLong(2))))
+            .agg(contentFingerprint(dataCols).as("_fp"), count(lit(1)).as("_n"))
+            .collect().map(r =>
+              r.getString(0) -> ((BigDecimal(r.getDecimal(1)), r.getLong(2))))
             .toMap // O(dv-files) rows; a fully-masked file yields none
           dvdFiles.flatMap(f => byCanon.get(canon(f)).map(f -> _)).toMap
         }
@@ -3044,28 +2766,11 @@ object DataLayout {
         if (readB.isEmpty) emptySide(dirB)
         else readMasked(spark, dirB, readB, versionB),
         keyCols, compareCols)
-    // GLOBAL fast path: additivity — whole-table sums decide equality
-    // across ANY clustering, zero data reads
-    if (fpA.size == filesA.size && fpB.size == filesB.size) {
-      def totals(m: Map[String, (String, Long)]) =
-        (m.values.map(v => BigDecimal(v._1)).sum, m.values.map(_._2).sum)
-      if (totals(fpA) == totals(fpB))
-        return LayoutDiff(diffOf(Nil, Nil), 0, filesA.size, 0, filesB.size)
-    }
-    // FILE fast path: multiset-cancel equal (fp, rows) pairs; the
-    // remainder (plus fingerprint-less files) is read
-    def counts(m: Map[String, (String, Long)]) =
-      m.values.groupBy(identity).map { case (k, v) => k -> v.size }
-    def unmatched(fps: Map[String, (String, Long)],
-        other: Map[(String, Long), Int]): Seq[String] = {
-      val budget = scala.collection.mutable.Map(other.toSeq: _*)
-      fps.toSeq.sortBy(_._1).flatMap { case (f, k) =>
-        val c = budget.getOrElse(k, 0)
-        if (c > 0) { budget(k) = c - 1; None } else Some(f)
-      }
-    }
-    val readA = (filesA.filterNot(fpA.contains) ++ unmatched(fpA, counts(fpB))).sorted
-    val readB = (filesB.filterNot(fpB.contains) ++ unmatched(fpB, counts(fpA))).sorted
+    // GLOBAL fast path (every file fingerprinted, equal whole-table sums:
+    // equal across ANY clustering, zero data reads), else the FILE fast
+    // path; the remainder (plus fingerprint-less files) is read
+    val (readA, readB) =
+      fpUncancelled(filesA.map(f => f -> fpA.get(f)), filesB.map(f => f -> fpB.get(f)))
     // CHECKSUM BISECTION — the dirty-path degrader's antidote: when two
     // DIFFERENTLY-CLUSTERED layouts differ by even one row, no file
     // fingerprint cancels and both dirty sets are the whole table. Feeding
@@ -3601,79 +3306,20 @@ object DataLayout {
     // catch-up shape (a streaming sink's backlog) plans O(runs), not
     // O(versions). Rewrite/DV steps keep the per-step JoinDiff at churn
     // cost.
-    // per file (sentinels included — they carry the horizon marker and
-    // version watermarks): lifetime [va, vr) plus the content
-    // fingerprint + row count (null-safe max collapses the added row,
-    // its tombstone twin and any vacuum-lingering duplicates — all carry
-    // identical values). Driver-side on the local-log path (jobless);
-    // the distributed groupBy only past the size guard.
-    val allRows: Array[(String, Long, Long, String, Long)] =
-      manifestRowsLocal(spark, dir).filter { case (s, _) =>
-        Seq("file", "v_added", "v_removed").forall(s.fieldNames.contains)
-      } match {
-        case Some((s, rows)) =>
-          val iF = s.fieldNames.indexOf("file")
-          val iA = s.fieldNames.indexOf("v_added")
-          val iR = s.fieldNames.indexOf("v_removed")
-          val iFp = s.fieldNames.indexOf("content_fp")
-          val iNr = s.fieldNames.indexOf("n_rows")
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Any, Any, Any, Any)]
-          def g(r: org.apache.spark.sql.Row, i: Int): Any =
-            if (i < 0 || r.isNullAt(i)) null else r.get(i)
-          for (r <- rows) {
-            val f = r.getString(iF)
-            val p = acc.getOrElse(f, (null, null, null, null))
-            acc(f) = (LogLocal.maxVal(p._1, g(r, iA)),
-              LogLocal.maxVal(p._2, g(r, iR)),
-              LogLocal.maxVal(p._3, g(r, iFp)),
-              LogLocal.maxVal(p._4, g(r, iNr)))
-          }
-          acc.iterator.map { case (f, (va, vr, fp, nr)) =>
-            (f,
-              if (va == null) -1L else va.asInstanceOf[Long],
-              if (vr == null) Long.MaxValue else vr.asInstanceOf[Long],
-              if (fp == null) null
-              else fp.asInstanceOf[java.math.BigDecimal].toPlainString,
-              if (nr == null) -1L else nr.asInstanceOf[Long])
-          }.toArray
-        case None =>
-          val mLog = manifestLog(spark, dir)
-          val hasFp = mLog.columns.contains("content_fp")
-          mLog.groupBy("file")
-            .agg(max("v_added").as("va"), max("v_removed").as("vr"),
-              (if (hasFp) max(col("content_fp").cast("string"))
-               else lit(null).cast("string")).as("fp"),
-              max("n_rows").as("nr"))
-            .collect().map(r => (r.getString(0),
-              if (r.isNullAt(1)) -1L else r.getLong(1),
-              if (r.isNullAt(2)) Long.MaxValue else r.getLong(2),
-              if (r.isNullAt(3)) null else r.getString(3),
-              if (r.isNullAt(4)) -1L else r.getLong(4)))
-      }
-    val lives = allRows.filterNot(_._1.startsWith("_graft_"))
-    // ONE O(dv-files) dvLog probe feeds everything DV-shaped below —
-    // driver-side (size-guarded) when the log is small
-    val dvRows: Array[(String, Long)] =
-      dvRowsLocal(spark, dir) match {
-        case Some(rs) => rs.iterator.map(t => (t._1, t._3)).toSet.toArray
-        case None => dvLog(spark, dir) match {
-          case None => Array.empty
-          case Some(d) => d.select(canonCol(col("file")).as("f"), col("v"))
-            .distinct().collect().map(r => (r.getString(0), r.getLong(1)))
-        }
-      }
-    // guards, from the collects: current version (manifest + DV logs)
-    // and the vacuum horizon marker — a feed below the horizon would
-    // reconstruct from vacuumed files (negative fromVersion is the
-    // stream's synthetic initial snapshot)
-    val current = (allRows.iterator.flatMap(t =>
-      Iterator(t._2, if (t._3 == Long.MaxValue) -1L else t._3)) ++
-      dvRows.iterator.map(_._2) ++ Iterator(-1L)).max
+    // the manifest replay (sentinels included — they carry the horizon
+    // marker and version watermarks) and the DV replay feed everything
+    // below, driver-side on either side of the size cap
+    val m = manifestFold(spark, dir)
+    val lives = m.entries.filterNot(_.sentinel)
+    val dv = dvFold(spark, dir)
+    // guards: current version (manifest + DV logs) and the vacuum horizon
+    // marker — a feed below the horizon would reconstruct from vacuumed
+    // files (negative fromVersion is the stream's synthetic initial
+    // snapshot)
+    val current = math.max(m.maxVersion, dv.maxVersion)
     require(toVersion <= current,
       s"toVersion $toVersion beyond the log's $current")
-    val h = allRows.find(_._1 == VersionHorizonFile)
-      .map(_._2).filter(_ >= 0L).getOrElse(0L)
+    val h = m.horizon
     require(math.max(fromVersion, 0L) >= h,
       s"changeFeed from version $fromVersion predates the vacuum horizon " +
         s"$h — those versions' files were physically removed")
@@ -3681,13 +3327,13 @@ object DataLayout {
     // fingerprints say nothing about EFFECTIVE rows, so they never
     // participate in the fingerprint-cancel below (conservative —
     // version-insensitive on purpose)
-    val dvdCanon: Set[String] = dvRows.map(_._1).toSet
-    val fpByFile: Map[String, (String, Long)] =
-      lives.map(t => t._1 -> ((t._4, t._5))).toMap
+    val dvdCanon: Set[String] = dv.filesAt(Latest)
+    val fpByFile: Map[String, Option[(BigDecimal, Long)]] = lives.map(e =>
+      e.file -> e.fingerprint.filterNot(_ => dvdCanon(canon(e.file)))).toMap
     // DV commits in range: version -> canonical files touched
-    val dvCommits: Map[Long, Set[String]] = dvRows
-      .filter(t => t._2 > fromVersion && t._2 <= toVersion)
-      .groupBy(_._2).map { case (v, rs) => v -> rs.map(_._1).toSet }
+    val dvCommits: Map[Long, Set[String]] = dv.entries
+      .filter(e => e.v > fromVersion && e.v <= toVersion)
+      .groupBy(_.v).map { case (v, es) => v -> es.map(_.file).toSet }
     // the feed-end schema pins every read: union consistency across steps,
     // and a column that arrived mid-range reads NULL on older sides
     val endSchema = schemaAt(spark, dir, toVersion)
@@ -3716,32 +3362,19 @@ object DataLayout {
     // attributed at their own append version; the compacted twin's files
     // are never read.) The same checksum-grade acceptance diffLayouts'
     // file fast path rests on; anything unprovable keeps its JoinDiff.
-    def fpCancelled(s: Step): Boolean = {
-      if (s.dvFiles.nonEmpty || s.added.isEmpty || s.removed.isEmpty)
-        return false
-      def side(files: Seq[String]): Option[(BigDecimal, Long)] = {
-        val parts = files.map(f => fpByFile.get(f) match {
-          case Some((fp, nr)) if fp != null && nr >= 0 && !dvdCanon(canon(f)) =>
-            Some((BigDecimal(fp), nr))
-          case _ => None
-        })
-        if (parts.exists(_.isEmpty)) None
-        else Some((parts.flatten.map(_._1).sum, parts.flatten.map(_._2).sum))
-      }
-      (side(s.removed), side(s.added)) match {
-        case (Some(a), Some(b)) => a == b
-        case _ => false
-      }
-    }
+    def fpCancelled(s: Step): Boolean =
+      s.dvFiles.isEmpty && s.added.nonEmpty && s.removed.nonEmpty &&
+        fpUncancelled(s.removed.map(f => f -> fpByFile(f)),
+          s.added.map(f => f -> fpByFile(f))) == ((Nil, Nil))
     val steps: Vector[Step] = (fromVersion + 1 to toVersion).map { v =>
-      val added = lives.filter(_._2 == v).map(_._1).toIndexedSeq.sorted
-      val removed = lives.filter(t => t._3 == v && t._2 < v)
-        .map(_._1).toIndexedSeq.sorted
+      val added = lives.filter(_.added.contains(v)).map(_.file).sorted
+      val removed = lives.filter(e => e.removed.contains(v) && e.aliveAt(v - 1))
+        .map(_.file).sorted
       val dvf = dvCommits.getOrElse(v, Set.empty)
       val shared =
         if (dvf.isEmpty) Nil
-        else lives.filter(t => t._2 <= v - 1 && t._3 > v).map(_._1)
-          .filter(f => dvf(canon(f))).toIndexedSeq.sorted
+        else lives.filter(e => e.aliveAt(v - 1) && e.aliveAt(v)).map(_.file)
+          .filter(f => dvf(canon(f))).sorted
       Step(v, added, removed, shared)
     }.filter(s => s.added.nonEmpty || s.removed.nonEmpty || s.dvFiles.nonEmpty)
       .filterNot(fpCancelled)
@@ -3812,8 +3445,7 @@ object DataLayout {
         def side(files: Seq[String], v: Long): DataFrame =
           if (files.isEmpty) emptySide
           else readMasked(spark, dir, files, v, endSchema,
-            dvCanonKnown = Some(
-              dvRows.collect { case (f, dv) if dv <= v => f }.toSet))
+            dvCanonKnown = Some(dv.filesAt(v)))
         plans += graft.diff.JoinDiffer.diff(
           side(s.removed ++ s.dvFiles, s.v - 1),
           side(s.added ++ s.dvFiles, s.v), keyCols, cmp)
@@ -3836,7 +3468,7 @@ object DataLayout {
   def recluster(spark: SparkSession, dir: String, dims: Seq[Column],
       bits: Int, statsCols: Seq[String], numFiles: Int): ReclusterReport = {
     require(numFiles >= 1, s"numFiles must be >= 1: $numFiles")
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val aliveDf = aliveManifest(spark, dir)
     val files = aliveDf.select("file")
       .collect().map(_.getString(0)).toSeq.sorted // O(files): paths only
     require(files.nonEmpty, s"layout at $dir has no alive files to recluster")
@@ -3972,7 +3604,9 @@ object DataLayout {
       s"key column '$k' not in delta schema ${delta.columns.mkString(",")}"))
     deleteKeys.foreach(dk => require(dk.columns.sorted.sameElements(keyCols.sorted),
       s"deleteKeys must carry exactly the key columns ${keyCols.sorted.mkString(",")}"))
-    val aliveDf = pinned(aliveManifest(spark, dir))
+    val m = manifestFold(spark, dir)
+    val alive = m.aliveAt(dir, Latest)
+    val aliveDf = m.frame(spark, alive)
     val envKey = keyCols.head
     requireStats(aliveDf, Seq((envKey, null, null)))
     val layoutCols = schemaFor(spark, dir).fieldNames
@@ -4012,9 +3646,7 @@ object DataLayout {
       "a key appears in both the upsert delta and deleteKeys — resolve " +
         "last-event-wins upstream; this operator refuses the ambiguity")
     val allKeys = keyTags.select(keyCols.map(col): _*)
-    // the pinned alive manifest is a LocalRelation on the driver-local log
-    // path — count its rows there instead of spending a job
-    val aliveCount = localRowCount(aliveDf).getOrElse(aliveDf.count()).toInt
+    val aliveCount = alive.length
     // file targeting: a file can hold a composite key iff EVERY key
     // column's [min, max] envelope admits that key's value — intersecting
     // all stats-covered key columns, not just the first (a first key that

@@ -1,6 +1,6 @@
 package graft.layout
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -11,14 +11,13 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** DRIVER-SIDE reader for the layout's tiny metadata logs (manifest,
-  * schema log): a version probe or an alive-set derivation is O(files)
-  * rows of stats by design, yet reading it through `spark.read.parquet`
-  * costs a full Spark job — plan, codegen, schedule, exchange — per probe
-  * (plus a second footer-merge job for `mergeSchema`). A layout mutation
-  * pays 3–6 such probes and a composite gate pays dozens, so the fixed
-  * job cost dominates the whole layout surface at bench scale (guide §1:
-  * measured via GateProbe — 60+ jobs on q_layout_maintain, most of them
-  * sub-second metadata probes).
+  * schema log, DV log): a version probe or an alive-set derivation is
+  * O(files) rows of stats by design, yet reading it through
+  * `spark.read.parquet` costs a full Spark job — plan, codegen, schedule,
+  * exchange — per probe (plus a second footer-merge job for
+  * `mergeSchema`). A layout mutation pays 3–6 such probes and a composite
+  * gate pays dozens, so the fixed job cost dominates the whole layout
+  * surface at bench scale.
   *
   * This reader lists the log dir and decodes every row with the parquet
   * example API on the driver — microseconds per file, zero Spark jobs —
@@ -27,12 +26,13 @@ import org.apache.spark.sql.types._
   * is driver state; only DATA gets jobs.
   *
   * SCALE GUARD: the moment a log outgrows [[maxLocalBytes]] (default
-  * 64 MB ≈ several hundred thousand stats rows — far beyond any log the
-  * local bench or a 100 TB table's O(files) manifest produces before
-  * vacuum compaction), [[read]] returns None and every caller falls back
-  * to the distributed path unchanged. Unknown parquet shapes (INT96,
-  * nanos timestamps, unexpected annotations) also return None rather
-  * than guess.
+  * 64 MB ≈ several hundred thousand stats rows), [[read]] returns None.
+  * Unknown parquet shapes (INT96, nanos timestamps, unexpected
+  * annotations) also return None rather than guess. The cap decides only
+  * HOW the rows are obtained: the replay functions in [[DataLayout]]
+  * (`manifestFold`, `dvFold`) then run the same fold through a Spark
+  * `groupBy`/`max` and collect its O(files) result, and every metadata
+  * answer is derived from that one fold on either side of the cap.
   */
 private[layout] object LogLocal {
 
@@ -71,17 +71,18 @@ private[layout] object LogLocal {
         s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString(dir + "\u0000", "|", "")
 
-  /** List the log dir's visible parquet part files — same selection as
-    * Spark's file index (hidden `_`/`.` prefixes skipped). None when the
-    * dir does not exist. */
-  private def listLog(spark: SparkSession, dir: String): Option[Seq[FileStatus]] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    Some(fs.listStatus(p).toSeq.filter(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet") &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
-  }
+  /** The log dir's VISIBLE part files — Spark's file-index rule:
+    * `.parquet` files whose names do not start with `_` or `.`. Every log
+    * reader and vacuum's snapshot list through this one rule, so a
+    * driver-staged commit (`_stage_*.parquet`, renamed into place or
+    * swept at any moment) is never part of a log read. None when the dir
+    * does not exist. */
+  def logFiles(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
+    if (!fs.exists(dir)) None
+    else Some(fs.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    })
 
   /** Spark type for a parquet primitive field; None = a shape this reader
     * does not handle (caller falls back to the distributed read). */
@@ -193,10 +194,12 @@ private[layout] object LogLocal {
         case Some(names) =>
           val fs = new Path(dir).getFileSystem(conf)
           names.map(n => fs.getFileStatus(new Path(n)))
-        case None => listLog(spark, dir) match {
-          case None => return None
-          case Some(s) => s
-        }
+        case None =>
+          val p = new Path(dir)
+          logFiles(p.getFileSystem(conf), p) match {
+            case None => return None
+            case Some(s) => s
+          }
       }
       if (statuses.map(_.getLen).sum > maxLocalBytes) return None
       val key = cacheKey(dir, statuses)
@@ -389,5 +392,51 @@ private[layout] object LogLocal {
       }
     } finally writer.close()
     true
+  }
+
+  // ---- single-row metadata dirs (view and replica definitions) -----------
+
+  private val ListSep = "\u0001"
+
+  /** Replace the one-row metadata dir `dir` with `values` (name → String,
+    * Long or Seq[String]), written on the driver. A Seq[String] is stored
+    * \\u0001-joined, so the row is all primitives — the shape
+    * [[writeLocal]] supports. Single-writer metadata: the delete-then-write
+    * window is the one an overwrite has. */
+  def writeMetaRow(spark: SparkSession, dir: String,
+      values: Seq[(String, Any)]): Unit = {
+    val flat = values.map {
+      case (n, l: Seq[_]) => (n, l.mkString(ListSep))
+      case other => other
+    }
+    val schema = StructType(flat.map {
+      case (n, _: Long) => StructField(n, LongType)
+      case (n, _) => StructField(n, StringType)
+    })
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    require(writeLocal(spark, schema, Seq(Row.fromSeq(flat.map(_._2))),
+      new Path(p, s"part-local-${java.util.UUID.randomUUID.toString.take(12)}.parquet")),
+      s"metadata row not writable: $schema")
+  }
+
+  /** The one row of a metadata dir, by column name. Rows written before
+    * the \\u0001 spelling hold arrays, which [[read]] declines; those go
+    * through a Spark read. */
+  def readMetaRow(spark: SparkSession, dir: String): Map[String, Any] = {
+    val (schema, r) = read(spark, dir) match {
+      case Some((s, rows)) if rows.nonEmpty => (s, rows.head)
+      case _ =>
+        val df = spark.read.parquet(dir)
+        (df.schema, df.head())
+    }
+    schema.fieldNames.zip(r.toSeq).toMap
+  }
+
+  /** A list column of [[readMetaRow]]: \\u0001-joined or an array. */
+  def metaList(v: Any): Seq[String] = v match {
+    case s: String => s.split(ListSep).toSeq
+    case a: scala.collection.Seq[_] => a.map(_.toString).toSeq
+    case other => throw new IllegalStateException(s"unreadable metadata list: $other")
   }
 }

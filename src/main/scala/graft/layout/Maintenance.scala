@@ -1,7 +1,6 @@
 package graft.layout
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** NIGHTLY MAINTENANCE as a policy, not a runbook: measure the layout's
   * debt from the manifest alone, decide which of the existing primitives
@@ -81,10 +80,12 @@ object Maintenance {
     * view: everything tombstoned and off the alive set). */
   def assess(spark: SparkSession, dir: String, rowsPerFile: Long,
       retainVersions: Int = 0): Debt = {
-    val alive = DataLayout.aliveManifest(spark, dir)
-      .select("file", "zmin", "zmax", "n_rows").collect()
-    val rows = alive.map(r => if (r.isNullAt(3)) 0L else r.getLong(3)).sum
-    val small = alive.count(r => !r.isNullAt(3) && r.getLong(3) < rowsPerFile / 2)
+    val m = DataLayout.manifestFold(spark, dir)
+    val dv = DataLayout.dvFold(spark, dir)
+    val alive = m.aliveAt(dir, DataLayout.Latest)
+    val (zmin, zmax, nRows) = (m.longCol("zmin"), m.longCol("zmax"), m.longCol("n_rows"))
+    val rows = alive.flatMap(nRows).sum
+    val small = alive.count(e => nRows(e).exists(_ < rowsPerFile / 2))
     // the same interval sweep compactZOrdered clusters by, over the same
     // sub-rowsPerFile population the policy will hand it — overlap among
     // already-FULL files is not actionable debt (rewriting it would make
@@ -103,33 +104,21 @@ object Maintenance {
       flush()
       (clusters, clusterFiles)
     }
-    val withZ = alive.filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+    // (z interval, rows) of the files with a recorded z interval
+    val withZ = alive.flatMap(e =>
+      for (lo <- zmin(e); hi <- zmax(e)) yield ((lo, hi), nRows(e)))
     val (clusters, clusterFiles) = sweep(withZ
-      .filter(_.getLong(3) < rowsPerFile)
-      .map(r => (r.getLong(1), r.getLong(2))).sortBy(identity))
+      .collect { case (iv, n) if n.forall(_ < rowsPerFile) => iv }.sorted)
     // TOLERATED residual: overlap among already-full files — never
     // rewritten by the policy (write amp would be ∝ table size), but it
     // costs pruning precision on their z-range; a rising curve here is
     // the operator's cue to schedule a full recluster
     val (_, fullOverlap) = sweep(withZ
-      .filter(_.getLong(3) >= rowsPerFile)
-      .map(r => (r.getLong(1), r.getLong(2))).sortBy(identity))
-    val aliveCanon = alive.map(r => DataLayout.canon(r.getString(0))).toSet
-    val (dvFiles, dvRows) = DataLayout.dvFileCountsLocal(spark, dir) match {
-      case Some(counts) => // driver-side (size-guarded), zero jobs
-        val hit = counts.toSeq.filter(t => aliveCanon(t._1))
-        (hit.length, hit.map(_._2).sum)
-      case None => DataLayout.dvLogDeduped(spark, dir) match {
-        case None => (0, 0L)
-        case Some(d) =>
-          val byFile = d.groupBy("file").agg(count(lit(1)).as("n")).collect()
-            .map(r => (DataLayout.canon(r.getString(0)), r.getLong(1)))
-            .filter(t => aliveCanon(t._1))
-          (byFile.length, byFile.map(_._2).sum)
-      }
-    }
-    Debt(alive.length, rows, small, clusterFiles, clusters, dvFiles, dvRows,
-      reclaimableCount(spark, dir, aliveCanon, retainVersions), fullOverlap)
+      .collect { case (iv, Some(n)) if n >= rowsPerFile => iv }.sorted)
+    val aliveCanon = alive.map(e => DataLayout.canon(e.file)).toSet
+    Debt(alive.length, rows, small, clusterFiles, clusters,
+      dv.entries.map(_.file).distinct.count(aliveCanon), dv.positions(aliveCanon),
+      reclaimableCount(spark, dir, m, dv, retainVersions), fullOverlap)
   }
 
   /** Tombstoned-but-on-disk count that VACUUM CAN ACTUALLY RECLAIM under
@@ -141,33 +130,20 @@ object Maintenance {
     * a whole-log rewrite per pass for zero yield. Kept as a targeted probe
     * so the mid-pass re-checks in [[run]] don't pay a full [[assess]]. */
   private def reclaimableCount(spark: SparkSession, dir: String,
-      aliveCanon: Set[String], retainVersions: Int): Int = {
-    val hwm = DataLayout.currentVersion(spark, dir)
-    val horizon = math.max(DataLayout.vacuumHorizon(spark, dir),
-      math.max(0L, hwm - retainVersions))
+      m: DataLayout.ManifestFold, dv: DataLayout.DvFold,
+      retainVersions: Int): Int = {
+    val hwm = math.max(m.maxVersion, dv.maxVersion)
+    val horizon = math.max(m.horizon, math.max(0L, hwm - retainVersions))
+    val aliveCanon = m.aliveAt(dir, DataLayout.Latest)
+      .map(e => DataLayout.canon(e.file)).toSet
     // ON-DISK check as well as the log test: vacuum's grace-deferred log
     // reclaim leaves tombstone rows visible for already-deleted files —
     // counting those would re-fire the trigger forever after one vacuum
     val onDisk = DataLayout.listDataFiles(spark, dir)
       .map(DataLayout.canon).toSet
-    val tombstonedAtOrBelow: Seq[String] =
-      DataLayout.fileMaxRemovedLocal(spark, dir) match {
-        case Some(m) => // driver-side (size-guarded), zero jobs
-          m.toSeq.collect { case (f, vr) if vr <= horizon => f }
-        case None => DataLayout.manifestLog(spark, dir)
-          .where(!col("file").startsWith("_graft_")) // synthetic sentinels
-          .groupBy("file").agg(max("v_removed").as("_vr"))
-          .where(col("_vr").isNotNull && col("_vr") <= horizon)
-          .select("file").collect().map(_.getString(0)).toSeq
-      }
-    tombstonedAtOrBelow
-      .map(DataLayout.canon)
-      .count(f => !aliveCanon(f) && onDisk(f))
+    m.entries.filter(e => !e.sentinel && e.removed.exists(_ <= horizon))
+      .map(e => DataLayout.canon(e.file)).count(f => !aliveCanon(f) && onDisk(f))
   }
-
-  private def aliveCanonSet(spark: SparkSession, dir: String): Set[String] =
-    DataLayout.aliveManifest(spark, dir).select("file").collect()
-      .map(r => DataLayout.canon(r.getString(0))).toSet
 
   /** Assess, decide, run, re-assess. `dims`/`bits`/`statsCols` must match
     * the layout's clustering (as for every rewrite primitive). */
@@ -189,17 +165,19 @@ object Maintenance {
     // re-measure small-file debt AFTER the rewrites above (purge/compact
     // may have consolidated or produced small files this pass should see)
     // — a targeted count, not a full assess
-    val midSmall = DataLayout.aliveManifest(spark, dir)
-      .where(col("n_rows") < policy.rowsPerFile / 2).count().toInt
+    val mid = DataLayout.manifestFold(spark, dir)
+    val midRows = mid.longCol("n_rows")
+    val midSmall = mid.aliveAt(dir, DataLayout.Latest)
+      .count(e => midRows(e).exists(_ < policy.rowsPerFile / 2))
     val packed =
       if (midSmall >= policy.minSmallFiles) {
         reasons += s"bin-pack: $midSmall small files (< ${policy.rowsPerFile / 2} rows)"
         Some(DataLayout.compactSmallFiles(spark, dir, dims, bits, statsCols,
           policy.rowsPerFile))
       } else None
-    val reclaimableNow =
-      reclaimableCount(spark, dir, aliveCanonSet(spark, dir),
-        policy.retainVersions)
+    val reclaimableNow = reclaimableCount(spark, dir,
+      DataLayout.manifestFold(spark, dir), DataLayout.dvFold(spark, dir),
+      policy.retainVersions)
     val vacuumed =
       if (reclaimableNow >= policy.minReclaimableFiles) {
         reasons += s"vacuum: $reclaimableNow reclaimable files, retaining ${policy.retainVersions} versions"

@@ -54,54 +54,20 @@ object MatView {
       groupCols: Seq[String], measures: Seq[String], keyCols: Seq[String])
 
   /** One tiny metadata row per view, written and read DRIVER-SIDE
-    * (LogLocal) — a refresh used to pay a full Spark write cycle for the
-    * version bump and a read job per meta probe. The column lists are
-    * stored \\u0001-joined so the row is all primitives (the shape the local
-    * parquet writer supports); the reader still accepts the pre-r20
-    * array spelling. */
-  private def writeMeta(spark: SparkSession, viewDir: String, d: ViewDef): Unit = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("layout_dir", org.apache.spark.sql.types.StringType)
-      .add("version", org.apache.spark.sql.types.LongType)
-      .add("group_cols", org.apache.spark.sql.types.StringType)
-      .add("measures", org.apache.spark.sql.types.StringType)
-      .add("key_cols", org.apache.spark.sql.types.StringType)
-    val row = org.apache.spark.sql.Row(d.layoutDir, d.version,
-      d.groupCols.mkString("\u0001"), d.measures.mkString("\u0001"),
-      d.keyCols.mkString("\u0001"))
-    val dirP = new org.apache.hadoop.fs.Path(metaPath(viewDir))
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dirP, true) // single-writer metadata, same window as overwrite
-    if (!LogLocal.writeLocal(spark, schema, Seq(row),
-        new org.apache.hadoop.fs.Path(dirP,
-          s"part-local-${java.util.UUID.randomUUID.toString.take(12)}.parquet"))) {
-      import spark.implicits._
-      Seq((d.layoutDir, d.version, d.groupCols.mkString("\u0001"),
-          d.measures.mkString("\u0001"), d.keyCols.mkString("\u0001")))
-        .toDF("layout_dir", "version", "group_cols", "measures", "key_cols")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(viewDir))
-    }
-  }
+    * ([[LogLocal.writeMetaRow]]) — a refresh used to pay a full Spark write
+    * cycle for the version bump and a read job per meta probe. */
+  private def writeMeta(spark: SparkSession, viewDir: String, d: ViewDef): Unit =
+    LogLocal.writeMetaRow(spark, metaPath(viewDir), Seq(
+      "layout_dir" -> d.layoutDir, "version" -> d.version,
+      "group_cols" -> d.groupCols, "measures" -> d.measures,
+      "key_cols" -> d.keyCols))
 
-  /** The view's definition + the layout version its rows reflect
-    * (driver-side read; Spark-read fallback for unknown shapes). */
+  /** The view's definition + the layout version its rows reflect. */
   def meta(spark: SparkSession, viewDir: String): ViewDef = {
-    val (schema, r) = LogLocal.read(spark, metaPath(viewDir)) match {
-      case Some((s, rows)) if rows.nonEmpty => (s, rows.head)
-      case _ =>
-        val df = spark.read.parquet(metaPath(viewDir))
-        (df.schema, df.head())
-    }
-    def ss(n: String): Seq[String] = r.get(schema.fieldIndex(n)) match {
-      case s: String => s.split('\u0001').toSeq
-      case a: scala.collection.Seq[_] => a.map(_.toString).toSeq
-      case other => throw new IllegalStateException(
-        s"unreadable view meta column $n: $other")
-    }
-    def at(n: String) = r.get(schema.fieldIndex(n))
-    ViewDef(at("layout_dir").asInstanceOf[String],
-      at("version").asInstanceOf[Long],
-      ss("group_cols"), ss("measures"), ss("key_cols"))
+    val m = LogLocal.readMetaRow(spark, metaPath(viewDir))
+    ViewDef(m("layout_dir").asInstanceOf[String], m("version").asInstanceOf[Long],
+      LogLocal.metaList(m("group_cols")), LogLocal.metaList(m("measures")),
+      LogLocal.metaList(m("key_cols")))
   }
 
   /** The aggregate expressions of the view definition — shared verbatim by

@@ -45,50 +45,19 @@ object Replica {
       keyCols: Seq[String])
 
   /** One tiny metadata row per replica, written and read DRIVER-SIDE
-    * (LogLocal): a sync used to pay a full Spark write cycle for the
-    * version-pin bump and a Spark read job per meta probe. Key columns
-    * are stored \\u0001-joined so the row is all primitives (the shape the
-    * local parquet writer supports); the reader still accepts the pre-r20
-    * array spelling. */
+    * ([[LogLocal.writeMetaRow]]): a sync used to pay a full Spark write
+    * cycle for the version-pin bump and a Spark read job per meta probe. */
   private def writeMeta(spark: SparkSession, dstDir: String,
-      d: ReplicaDef): Unit = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("src_dir", org.apache.spark.sql.types.StringType)
-      .add("src_version", org.apache.spark.sql.types.LongType)
-      .add("key_cols", org.apache.spark.sql.types.StringType)
-    val row = org.apache.spark.sql.Row(
-      d.srcDir, d.srcVersion, d.keyCols.mkString("\u0001"))
-    val dirP = new org.apache.hadoop.fs.Path(metaPath(dstDir))
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dirP, true) // single-writer metadata, same window as overwrite
-    if (!LogLocal.writeLocal(spark, schema, Seq(row),
-        new org.apache.hadoop.fs.Path(dirP,
-          s"part-local-${java.util.UUID.randomUUID.toString.take(12)}.parquet"))) {
-      import spark.implicits._
-      Seq((d.srcDir, d.srcVersion, d.keyCols.mkString("\u0001")))
-        .toDF("src_dir", "src_version", "key_cols")
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(dstDir))
-    }
-  }
+      d: ReplicaDef): Unit =
+    LogLocal.writeMetaRow(spark, metaPath(dstDir), Seq(
+      "src_dir" -> d.srcDir, "src_version" -> d.srcVersion,
+      "key_cols" -> d.keyCols))
 
-  /** The replica's pinned source position (driver-side read; falls back to
-    * a Spark read for oversized/unknown shapes). */
+  /** The replica's pinned source position. */
   def meta(spark: SparkSession, dstDir: String): ReplicaDef = {
-    val (schema, r) = LogLocal.read(spark, metaPath(dstDir)) match {
-      case Some((s, rows)) if rows.nonEmpty => (s, rows.head)
-      case _ =>
-        val df = spark.read.parquet(metaPath(dstDir))
-        (df.schema, df.head())
-    }
-    def at(n: String) = r.get(schema.fieldIndex(n))
-    val keyCols = at("key_cols") match {
-      case s: String => s.split('\u0001').toSeq
-      case a: scala.collection.Seq[_] => a.map(_.toString).toSeq
-      case other => throw new IllegalStateException(
-        s"unreadable replica key_cols: $other")
-    }
-    ReplicaDef(at("src_dir").asInstanceOf[String],
-      at("src_version").asInstanceOf[Long], keyCols)
+    val m = LogLocal.readMetaRow(spark, metaPath(dstDir))
+    ReplicaDef(m("src_dir").asInstanceOf[String],
+      m("src_version").asInstanceOf[Long], LogLocal.metaList(m("key_cols")))
   }
 
   /** Seed `dstDir` with the source's current rows, clustered by the

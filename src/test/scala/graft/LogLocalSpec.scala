@@ -9,16 +9,20 @@ import graft.layout.DataLayout
 
 /** Hardening pins for the driver-local metadata-log reader (LogLocal):
   *
-  *  1. CAP CROSSING — the 64 MB size guard is the entire 100 TB safety
-  *     argument for driver-local serving: past it the distributed read
-  *     owns the log. The `graft.test.localLogMaxMB` system property
-  *     forces the cap to 0 inside this JVM, and every metadata-derived
-  *     answer (current version, alive set, schema, masked read, change
-  *     feed) must be IDENTICAL through the fallback.
+  *  1. CAP CROSSING — the 64 MB size guard decides only HOW the log's
+  *     rows are obtained: below it they decode on the driver, past it one
+  *     Spark `groupBy` replays the manifest (and the DV log) and collects
+  *     the O(files) result. Every answer is then derived from the same
+  *     per-file fold, so each must be IDENTICAL on both sides of the cap.
+  *     The `graft.test.localLogMaxMB` system property forces the cap to 0
+  *     inside this JVM.
   *  2. COMMIT/VACUUM INVALIDATION — the decode LRU is keyed on the log
   *     dir + every part file's (name, len, mtime); any commit adds a file
   *     and any vacuum rewrites the set. A cached decode must never serve
   *     a pre-commit alive set or a pre-vacuum version.
+  *  3. STAGED COMMITS — a driver-staged commit (`_stage_*.parquet`) is
+  *     not part of the log until its rename; vacuum's snapshot lists the
+  *     log with the readers' visible-file rule and never reads one.
   */
 class LogLocalSpec extends AnyFunSuite {
   lazy val spark = SparkTest.spark
@@ -44,15 +48,31 @@ class LogLocalSpec extends AnyFunSuite {
       spark.range(400, 500).select(col("id").as("k"), (col("id") * 3 % 97).as("x")),
       Seq(col("k"), col("x")), 16, Seq("k", "x"), dir, numFiles = 2)
     DataLayout.deleteVectors(spark, dir, Seq(("k", 10L, 30L)))
+    DataLayout.appendZOrderedTxn(
+      spark.range(500, 540).select(col("id").as("k"), (col("id") * 3 % 97).as("x")),
+      Seq(col("k"), col("x")), 16, Seq("k", "x"), dir, numFiles = 1,
+      txnApp = "cap", txnBatch = 7L)
+    // a vacuum that keeps every version: its compacted base, markers and
+    // grace-lingering commit files are replayed alongside the new ones
+    DataLayout.vacuum(spark, dir, retainVersions = 10)
+    val clone = freshDir("cap_clone")
+    DataLayout.cloneLayout(spark, dir, clone, version = 1L)
 
-    def snapshot(): (Long, Seq[String], Seq[String], Seq[(Long, Long)], Long) = (
+    def snapshot() = (
       DataLayout.currentVersion(spark, dir),
       DataLayout.aliveManifest(spark, dir).select("file")
         .collect().map(_.getString(0)).toSeq.sorted,
       DataLayout.schemaFor(spark, dir).fieldNames.toSeq,
       DataLayout.readLayout(spark, dir).as[(Long, Long)]
         .collect().toSeq.sorted,
-      DataLayout.changeFeed(spark, dir, 0L, 2L, Seq("k"), Seq("x")).count())
+      DataLayout.changeFeed(spark, dir, 0L, 2L, Seq("k"), Seq("x")).count(),
+      DataLayout.vacuumHorizon(spark, dir),
+      DataLayout.diffVersions(spark, dir, 0L, 3L, Seq("k"), Seq("x")).df.count(),
+      { val d = DataLayout.diffLayouts(spark, dir, clone, Seq("k"), Seq("x"))
+        (d.df.count(), d.filesReadA, d.filesReadB) },
+      DataLayout.dvEffectiveAt(spark, dir),
+      graft.layout.Maintenance.assess(spark, dir, rowsPerFile = 100L),
+      DataLayout.lastCommittedTxn(spark, dir, "cap"))
 
     val local = snapshot()
     val fallback = withCap("0")(snapshot())
@@ -96,5 +116,32 @@ class LogLocalSpec extends AnyFunSuite {
     assert(DataLayout.readLayout(spark, dir).count() == rowsBefore)
     intercept[IllegalArgumentException](
       DataLayout.readLayout(spark, dir, 0L).count())
+  }
+
+  test("vacuum leaves an in-flight driver-staged commit out of its snapshot") {
+    val dir = freshDir("stage")
+    seed(dir)
+    val v0 = DataLayout.currentVersion(spark, dir)
+    def aliveFiles() = DataLayout.aliveManifest(spark, dir).select("file")
+      .collect().map(_.getString(0)).toSet
+    val alive0 = aliveFiles()
+    // a commit between its stage write and its rename: manifest rows for
+    // a file no version committed, in the log dir as the driver-staged
+    // `_stage_<12 hex>.parquet` the commit protocol writes first
+    val rowsDir = freshDir("stage_rows")
+    DataLayout.manifestLog(spark, dir).limit(1)
+      .withColumn("file", lit(s"$dir/uncommitted.parquet"))
+      .withColumn("v_added", lit(v0 + 1))
+      .coalesce(1).write.parquet(rowsDir)
+    val part = new java.io.File(rowsDir).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val stage = new java.io.File(s"$dir/${DataLayout.ManifestDir}/_stage_0123456789ab.parquet")
+    Files.copy(part.toPath, stage.toPath)
+
+    DataLayout.vacuum(spark, dir)
+    assert(stage.exists(), "vacuum swept a young stage file")
+    assert(DataLayout.currentVersion(spark, dir) == v0,
+      "the staged rows' version became visible")
+    assert(aliveFiles() == alive0, "the staged rows' file became alive")
   }
 }
